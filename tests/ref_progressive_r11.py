@@ -7,15 +7,14 @@ decoder."""
 
 import numpy as np
 
+from ref_bits import _BitReader, _read_huff_sym
 from worlddatapipeline_spark.operators.multimodal import (
-    _BitReader,
     _jpeg_extend,
     _jpeg_geometry,
     _parse_dht,
     _parse_dqt,
     _parse_sof,
     _planes_to_pixels,
-    _read_huff_sym,
     _true_block_grid,
     _dct_basis,
     _JPEG_ZIGZAG,
@@ -91,7 +90,9 @@ def decode_jpeg_progressive_r11(data: bytes) -> np.ndarray:
             ]
             preds_dc = [0] * len(comps)
         elif marker == 0xC4:
-            _parse_dht(body, htables)
+            parsed = {}
+            _parse_dht(body, parsed)
+            htables.update((k, t.codes) for k, t in parsed.items())
         elif marker == 0xDA:
             if not comps:
                 raise ValueError("JPEG scan before SOF")

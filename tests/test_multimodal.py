@@ -8,6 +8,7 @@ asserted here.
 import pytest
 from pyspark.sql import functions as F
 
+from ref_bits import _BitReader, _BitWriter, _read_huff_sym
 from worlddatapipeline_spark.operators import multimodal as mm
 
 
@@ -757,6 +758,65 @@ def test_jpeg_16bit_dqt_roundtrip():
     p8 = mm.encode_jpeg_gray8(img)
     j = p8.index(b"\xff\xdb")
     assert p8[j + 4] == 0x00
+
+
+_AUDITS = {  # audit -> its output DDL
+    "jpeg_roundtrip_audit":
+        "doc_id long, n_pixels long, is_jfif boolean, max_err_le_3 boolean",
+    "jpeg420_roundtrip_audit":
+        "doc_id long, n_pixels long, is_jfif boolean, sof_is_420 boolean, "
+        "max_err_le_3 boolean",
+    "jpeg_restart_roundtrip_audit":
+        "doc_id long, n_pixels long, is_jfif boolean, has_restarts boolean, "
+        "max_err_le_3 boolean",
+    "jpeg_progressive_roundtrip_audit":
+        "doc_id long, n_pixels long, is_sof2 boolean, "
+        "matches_sequential boolean, max_err_le_3 boolean",
+    "jpeg_lossless_roundtrip_audit":
+        "doc_id long, n_pixels long, is_sof3 boolean, "
+        "gray_exact_all_predictors boolean, rgb_exact boolean",
+    "jpeg_hierarchical_roundtrip_audit":
+        "doc_id long, n_pixels long, is_dhp boolean, "
+        "gray_exact_all_levels boolean, rgb_exact boolean",
+    "png_palette_roundtrip_audit":
+        "doc_id long, n_pixels long, palette_adam7_exact boolean",
+    "png_full_surface_roundtrip_audit":
+        "doc_id long, n_pixels long, full_surface_exact boolean",
+    "bmp_surface_roundtrip_audit":
+        "doc_id long, n_pixels long, bmp_surface_exact boolean",
+    "wav_pcm_surface_roundtrip_audit":
+        "doc_id long, n_samples long, pcm_surface_exact boolean",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_AUDITS))
+def test_codec_audit_contract(spark, name):
+    """Every codec audit at its defaults (256 utf-8 bytes per row): rows
+    with fewer bytes are dropped (counted in bytes, not characters), the
+    schema is the audit's DDL, every property holds on the qualifying
+    rows, and empty input gives an empty frame with the same schema."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    audit = getattr(mm, name)
+    ddl = _AUDITS[name]
+    rows = [
+        (1, "a" * 300),
+        (2, "".join(chr(32 + (i * 37) % 95) for i in range(260))),
+        (3, "\u00e9" * 128),  # 256 bytes in 128 characters: kept
+        (4, "x" * 255),
+        (5, "short"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = audit(df, "doc_id", "text")
+    assert out.schema == _parse_datatype_string(ddl)
+    got = out.collect()
+    assert sorted(r["doc_id"] for r in got) == [1, 2, 3]
+    for r in got:
+        assert r[1] == 256, r
+        assert all(v is True for v in r[2:]), r
+    empty = audit(df.limit(0), "doc_id", "text")
+    assert empty.schema == out.schema
+    assert empty.collect() == []
 
 
 def test_jpeg_restart_audit_operator(spark):
@@ -1894,7 +1954,7 @@ def test_pack_bits_np_matches_bitwriter():
         vals = np.array(
             [int(rng.randint(0, 1 << b)) for b in nbits], dtype=np.int64
         )
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for v, b in zip(vals.tolist(), nbits.tolist()):
             bw.write(v, b)
         assert mm._pack_bits_np(vals, nbits.astype(np.int64)) == bw.flush()
@@ -1914,7 +1974,7 @@ def test_fastbits_lut_walk_matches_bitreader():
         amps = np.array(
             [int(rng.randint(0, 1 << c)) if c else 0 for c in cats]
         )
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for c, a in zip(cats.tolist(), amps.tolist()):
             code, length = dc[int(c)]
             bw.write(code, length)
@@ -1922,10 +1982,10 @@ def test_fastbits_lut_walk_matches_bitreader():
                 bw.write(int(a), int(c))
         stream = b"\x00\x00" + bw.flush() + b"\xff\xd9"
         # reference walk
-        br = mm._BitReader(stream, 2)
+        br = _BitReader(stream, 2)
         ref = []
         for c in cats.tolist():
-            s = mm._read_huff_sym(br, dec_tab)
+            s = _read_huff_sym(br, dec_tab)
             ref.append((s, br.bits(s) if s else 0))
         # fast walk
         fb = mm._FastBits(stream, 2)
@@ -1964,7 +2024,7 @@ def test_lossless_scan_matches_per_sample_reference():
         for y in range(h):
             for x in range(w):
                 for ci in range(n_comp):
-                    size = mm._read_huff_sym(br, tabs[ci])
+                    size = _read_huff_sym(br, tabs[ci])
                     if size == 16:
                         d = 32768
                     else:
@@ -1990,6 +2050,7 @@ def test_lossless_scan_matches_per_sample_reference():
     rng = np.random.RandomState(13)
     dc = mm._huff_codes(mm._JPEG_DC_BITS, mm._JPEG_DC_VALS)
     dec_tab = mm._huff_lookup(mm._JPEG_DC_BITS, mm._JPEG_DC_VALS)
+    huff = mm._huff_table(dec_tab)
     for trial in range(30):
         h = int(rng.randint(1, 14))
         w = int(rng.randint(1, 14))
@@ -2004,7 +2065,7 @@ def test_lossless_scan_matches_per_sample_reference():
         # random residual stream in the DC-category convention, with
         # large magnitudes so the mod-2^16 wrap genuinely fires
         d = rng.randint(-2047, 2048, size=h * w * n_comp)
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for v in d.tolist():
             size, amp = mm._jpeg_magnitude(int(v))
             code, length = dc[size]
@@ -2012,15 +2073,16 @@ def test_lossless_scan_matches_per_sample_reference():
             if size:
                 bw.write(amp, size)
         stream = bw.flush() + b"\xff\xd9"
-        tabs = [dec_tab] * n_comp
+        ref_br = _BitReader(stream, 0)
         ref = reference_scan(
-            mm._BitReader(stream, 0), h, w, tabs, predictor, refs=refs
+            ref_br, h, w, [dec_tab] * n_comp, predictor, refs=refs
         )
-        br = mm._BitReader(stream, 0)
-        got = mm._lossless_entropy_scan(br, h, w, tabs, predictor, refs=refs)
+        got, end = mm._lossless_entropy_scan(
+            stream, 0, h, w, [huff] * n_comp, predictor, refs=refs
+        )
         for a, b in zip(ref, got):
             assert np.array_equal(a, b), (predictor, h, w, n_comp)
-        assert br.pos == len(stream) - 2
+        assert end == ref_br.pos == len(stream) - 2
 
 
 def test_jpeg_entropy_encode_matches_per_block_reference():
@@ -2070,7 +2132,7 @@ def test_jpeg_entropy_encode_matches_per_block_reference():
         h0, w0 = planes[0].shape
         hs0, vs0 = sampling[0]
         mcus_y, mcus_x = h0 // (8 * vs0), w0 // (8 * hs0)
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         preds = [0] * len(planes)
         mcu_idx = 0
         for my in range(mcus_y):
@@ -2136,6 +2198,28 @@ def test_jpeg_entropy_encode_matches_per_block_reference():
             ) == reference_entropy_encode(planes, q, sampling, ri)
 
 
+@pytest.mark.parametrize(
+    "zz_pos, amp",
+    [(1, 70000), (16, 40000)],
+    ids=["size17_aliases_0x11", "size16_aliases_zrl"],
+)
+def test_jpeg_entropy_encode_refuses_ac_size_over_15(zz_pos, amp):
+    """An AC coefficient of category 16-17 spills into the run nibble of
+    its (run, size) symbol: run 0 / size 17 would emit Annex-K code 0x11
+    and run 15 / size 16 the ZRL code 0xF0, both valid, so the stream
+    would silently decode wrong.  The encoder must refuse it with the
+    same KeyError as an out-of-table DC category."""
+    import numpy as np
+
+    a = mm._dct_basis()
+    u, v = divmod(mm._JPEG_ZIGZAG[zz_pos], 8)
+    # one orthonormal basis function: every quantized coefficient but
+    # (u, v) is 0, so the only symbol out of range is this AC one
+    plane = 128.0 + amp * np.outer(a[u], a[v])
+    with pytest.raises(KeyError):
+        mm._jpeg_entropy_encode([plane], mm._jpeg_quant(None))
+
+
 def test_pack_bits_np_chunked_matches_single_pass(monkeypatch):
     """The r12 chunked packer (transient-memory cap) must produce the same
     bytes as the reference _BitWriter when symbols span chunk boundaries,
@@ -2150,7 +2234,7 @@ def test_pack_bits_np_chunked_matches_single_pass(monkeypatch):
         vals = np.array(
             [int(rng.randint(0, 1 << b)) for b in nbits], dtype=np.int64
         )
-        bw = mm._BitWriter()
+        bw = _BitWriter()
         for v, b in zip(vals.tolist(), nbits.tolist()):
             bw.write(v, b)
         assert mm._pack_bits_np(vals, nbits.astype(np.int64)) == bw.flush()
@@ -2243,7 +2327,7 @@ def test_buffered_bitwriter_matches_bitwriter():
 
     rng = np.random.RandomState(5151)
     for _ in range(50):
-        ref, got = mm._BitWriter(), mm._BufferedBitWriter()
+        ref, got = _BitWriter(), mm._BufferedBitWriter()
         m = 0
         for _op in range(int(rng.randint(0, 200))):
             if rng.randint(0, 12) == 0:

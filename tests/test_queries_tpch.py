@@ -102,3 +102,51 @@ def test_exact_percentiles_distributed_matches_percentile_bitwise(spark):
     for g, expected in ref.items():
         for p, e in zip(ps, expected):
             assert got[g][p] == e, (g, p, got[g][p], e)
+
+
+def test_exact_percentiles_distributed_null_group_key(spark):
+    """A NULL group key is a group of its own under groupBy + percentile;
+    the distributed form must return that group's percentiles too, not
+    drop it or leave them NULL."""
+    from worlddatapipeline_spark.operators.aggregates import (
+        exact_percentiles_distributed,
+    )
+
+    rows = [(None, 1.0), (None, 4.5), (None, -2.0), (None, None),
+            ("a", 3.0), ("a", 3.0), ("b", 7.25)]
+    df = spark.createDataFrame(rows, "g string, v double")
+    ps = [0.25, 0.5, 0.9]
+    ref = {
+        r["g"]: list(r["ref"])
+        for r in df.groupBy("g")
+        .agg(F.percentile("v", F.array(*[F.lit(p) for p in ps])).alias("ref"))
+        .collect()
+    }
+    got: dict = {}
+    for r in exact_percentiles_distributed(df, "v", ps, ["g"]).collect():
+        got.setdefault(r["g"], {})[r["p"]] = r["pct"]
+    assert set(got) == set(ref) == {None, "a", "b"}
+    for g, expected in ref.items():
+        assert [got[g][p] for p in ps] == expected, g
+
+
+def test_event_value_percentiles_null_event_type_branches_identical(
+    spark, monkeypatch
+):
+    """Both router branches of event_value_percentiles must agree on a
+    NULL event_type, including its n_events and an all-NULL-value group."""
+    from worlddatapipeline_spark import queries_tpch
+
+    events = spark.createDataFrame(
+        [(None, 1.0), (None, 2.5), (None, 9.0), ("view", 4.0),
+         ("view", 4.0), ("view", -1.0), ("click", None)],
+        "event_type string, value double",
+    )
+    monkeypatch.setattr(queries_tpch, "_t", lambda *_: (events,))
+    out = {}
+    for knob in ("1000000000", "0"):
+        monkeypatch.setenv("SPARK_GRAFT_PCT_DIST_MIN", knob)
+        rows = queries_tpch.q_event_value_percentiles(spark, SF).collect()
+        out[knob] = sorted((tuple(r) for r in rows), key=repr)
+    assert out["0"] == out["1000000000"]
+    assert len(out["0"]) == 3

@@ -75,11 +75,6 @@ def with_date_suffix(path: Column, date: Column | None = None) -> Column:
     )
 
 
-def first_segment(key: Column) -> Column:
-    """First path segment of an object key (`scene_scanner.py:593-614`)."""
-    return F.split(key, "/")[0]
-
-
 def path_stem(path: Column) -> Column:
     """Filename without directory or extension (pathlib .stem analog)."""
     base = F.element_at(F.split(path, r"[/\\]"), -1)

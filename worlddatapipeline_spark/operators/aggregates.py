@@ -303,7 +303,8 @@ def exact_percentiles_distributed(
 
     Returns one row per (group, p): ``group_cols…, p double, pct double``.
     NULL values are skipped exactly as ``percentile`` skips them; a group
-    whose values are all NULL simply yields no rows (callers left-join).
+    whose values are all NULL simply yields no rows (callers left-join);
+    a NULL group key is a group like any other, as under ``groupBy``.
     Group cardinality must be modest (it rides the driver fetch); the
     callers here have <= 5 groups or none.
     """
@@ -343,10 +344,18 @@ def exact_percentiles_distributed(
     off_df = spark.createDataFrame(
         offs, parts.select("_pid", *g).schema.add("_off", "long")
     )
+    # group keys match null-safely here and in the rank join below: a
+    # NULL key is a group of its own, exactly as groupBy + percentile
+    # treats it
     w = Window.partitionBy("_pid", *g).orderBy("_v")
+    cl = parts.withColumn("_cl", F.sum("_c").over(w))
     cumf = (
-        parts.withColumn("_cl", F.sum("_c").over(w))
-        .join(F.broadcast(off_df), ["_pid", *g])
+        cl.join(
+            F.broadcast(off_df),
+            [cl["_pid"] == off_df["_pid"]]
+            + [cl[c].eqNullSafe(off_df[c]) for c in g],
+        )
+        .drop(off_df["_pid"], *[off_df[c] for c in g])
         .withColumn("_cum", F.col("_cl") + F.col("_off"))
         .withColumn("_prev", F.col("_cum") - F.col("_c"))
     )
@@ -365,7 +374,7 @@ def exact_percentiles_distributed(
         parts.select(*g).schema.add("_p", "double").add("_pos", "double")
         .add("_lo", "long").add("_hi", "long"),
     )
-    cond = [cumf[c] == ranks[c] for c in g] + [
+    cond = [cumf[c].eqNullSafe(ranks[c]) for c in g] + [
         (
             (ranks["_lo"] >= cumf["_prev"]) & (ranks["_lo"] < cumf["_cum"])
         )

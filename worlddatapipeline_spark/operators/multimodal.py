@@ -63,7 +63,9 @@ Spark-side concerns (all real, all tested):
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Mapping
+from types import MappingProxyType
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -911,7 +913,7 @@ _JPEG_AC_CODES_K = _huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
 
 
 def _min_bits_per_lossless_sample(
-    tabs: list[dict[tuple[int, int], int]],
+    tabs: list[_HuffTable],
 ) -> int:
     """Lower bound on entropy-coded bits per lossless sample, derived from
     the scan's PARSED DC tables: one huffman symbol per sample (category 0
@@ -925,42 +927,10 @@ def _min_bits_per_lossless_sample(
     return max(
         1,
         min(
-            min(length for length, _ in tab) if tab else 1 for tab in tabs
+            min(length for length, _ in t.codes) if t.codes else 1
+            for t in tabs
         ),
     )
-
-
-class _BitWriter:
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:  # byte stuffing
-                self.out.append(0x00)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)  # pad with 1-bits per spec
-        return bytes(self.out)
-
-    def restart(self, m: int) -> None:
-        """Byte-align with 1-bit padding (through ``write`` so a 0xFF pad
-        byte still gets its stuffed 0x00), then emit RSTm.  The marker
-        itself is raw stream structure, never stuffed (T.81 §B.2.1)."""
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)
-        self.out += bytes([0xFF, 0xD0 + (m & 7)])
 
 
 def _jpeg_magnitude(v: int) -> tuple[int, int]:
@@ -986,7 +956,8 @@ _PACK_CHUNK_SYMS = 1 << 20  # symbols per packing slice (transient-memory cap)
 
 
 def _pack_bits_np(vals: np.ndarray, nbits: np.ndarray) -> bytes:
-    """Bit-identical vectorized form of a ``_BitWriter`` stream: each
+    """Bit-identical vectorized form of a per-symbol bit-writer stream
+    (the ``_BitWriter`` reference in ``tests/ref_bits.py``): each
     value's low ``nbits`` bits MSB-first in order, flush-padded with
     1-bits to a byte boundary, every 0xFF data byte stuffed with 0x00
     (T.81 B.1.1.5) — numpy passes instead of a per-symbol loop.
@@ -1085,13 +1056,14 @@ _JPEG_AC_ARRS_K = _codes_as_arrays(_JPEG_AC_CODES_K, 255)
 
 
 class _BufferedBitWriter:
-    """Drop-in ``_BitWriter`` replacement that records (value, nbits)
-    pairs and packs each segment through :func:`_pack_bits_np` at
-    flush/restart — bit-identical by construction (same MSB-first order,
-    1-bit flush padding, 0xFF00 stuffing, raw unstuffed RSTm bytes), at
-    a fraction of the per-call cost (§4.2: the per-symbol ``write`` loop
-    dominated the progressive encoder).  Pinned against ``_BitWriter``
-    by a differential test over random write/restart sequences."""
+    """Entropy-stream writer (``write``/``restart``/``flush``) that
+    records (value, nbits) pairs and packs each segment through
+    :func:`_pack_bits_np` at flush/restart — bit-identical by
+    construction (same MSB-first order, 1-bit flush padding, 0xFF00
+    stuffing, raw unstuffed RSTm bytes), at a fraction of the per-call
+    cost (§4.2: the per-symbol ``write`` loop dominated the progressive
+    encoder).  Pinned against the per-bit ``_BitWriter`` reference by a
+    differential test over random write/restart sequences."""
 
     __slots__ = ("_vals", "_nbits", "_chunks")
 
@@ -1156,7 +1128,7 @@ def _jpeg_entropy_encode(
     n_per_mcu = sum(hs * vs for hs, vs in sampling)
     nb = mcus_y * mcus_x * n_per_mcu
     if nb == 0:
-        return _BitWriter().flush()
+        return b""
     zz = np.empty((nb, 64), dtype=np.int64)
     comp = np.empty(nb, dtype=np.int64)
     i = 0
@@ -1215,9 +1187,11 @@ def _jpeg_entropy_encode(
         prevpos[np.concatenate(([True], bi[1:] != bi[:-1]))] = 0
     run = pos - prevpos - 1
     ac_size, ac_amp = _jpeg_magnitude_arrays(acs[bi, pj])
+    # a size above 15 would spill into sym's run nibble and alias a valid
+    # (run+1, size&15) code — beyond any DHT = old KeyError, like DC's
+    if int(ac_size.max(initial=0)) > 15:
+        raise KeyError(int(ac_size.max()))
     nzrl = run >> 4
-    # (run & 15) << 4 | size is always <= 255 (size <= 17 for int64 input
-    # sets only low bits 0-4), so the 0..255 table covers every symbol
     sym = ((run & 15) << 4) | ac_size
     acc_tab, acl_tab = _JPEG_AC_ARRS_K
     ac_lens = acl_tab[sym]
@@ -1441,18 +1415,33 @@ def _parse_dqt(body: bytes, qtables: dict[int, np.ndarray]) -> None:
         i += 65
 
 
-_DHT_CACHE: dict = {}
+class _HuffTable(NamedTuple):
+    """One parsed DHT table, shared read-only by every decode that meets
+    the same payload: ``codes`` is the canonical {(length, code): sym}
+    mapping (a read-only view), ``lut`` its :func:`_huff_lut` flat form
+    ``(syms, lens, max_len)``."""
+
+    codes: Mapping[tuple[int, int], int]
+    lut: tuple[tuple[int, ...], tuple[int, ...], int]
+
+
+def _huff_table(codes: dict[tuple[int, int], int]) -> _HuffTable:
+    return _HuffTable(MappingProxyType(codes), _huff_lut(codes))
+
+
+_DHT_CACHE: dict[bytes, _HuffTable] = {}
 
 
 def _parse_dht(
-    body: bytes, htables: dict[tuple[int, int], dict[tuple[int, int], int]]
+    body: bytes, htables: dict[tuple[int, int], _HuffTable]
 ) -> None:
-    """DHT segment parse shared by both decoders: one or more canonical
-    tables per segment, keyed (tc, th).  The decoder dict for each table
-    payload is cached (bounded, keyed on the raw bits+vals bytes): every
-    stream this repo's encoders emit carries the same Annex-K pair, so
-    per-image re-derivation was pure waste (§4.5); foreign tables still
-    build correctly and the cache clears itself at 64 entries."""
+    """DHT segment parse shared by every decoder: one or more canonical
+    tables per segment, keyed (tc, th).  Each table payload's
+    :class:`_HuffTable` is cached (bounded, keyed on the raw bits+vals
+    bytes): every stream this repo's encoders emit carries the same
+    Annex-K pair, so per-image re-derivation was pure waste (§4.5);
+    foreign tables still build correctly and the cache clears itself at
+    64 entries."""
     i = 0
     while i < len(body):
         tc, th = body[i] >> 4, body[i] & 0x0F
@@ -1462,7 +1451,7 @@ def _parse_dht(
         hit = _DHT_CACHE.get(key)
         if hit is None:
             vals = list(body[i + 17 : i + 17 + nv])
-            hit = _huff_lookup(bits, vals)
+            hit = _huff_table(_huff_lookup(bits, vals))
             if len(_DHT_CACHE) > 64:
                 _DHT_CACHE.clear()
             _DHT_CACHE[key] = hit
@@ -1507,19 +1496,6 @@ def _jpeg_geometry(
     mcus_x, mcus_y = -(-w // (8 * hmax)), -(-h // (8 * vmax))
     n_blocks = mcus_x * mcus_y * sum(hs * vs for _, hs, vs, _ in comps)
     return hmax, vmax, mcus_x, mcus_y, n_blocks
-
-
-def _read_huff_sym(br: "_BitReader", tab: dict[tuple[int, int], int]) -> int:
-    """Read one canonical-huffman symbol (≤16 bits) — the entropy-decode
-    primitive shared by the sequential and progressive scan loops."""
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | br.bit()
-        length += 1
-        sym = tab.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("bad huffman code")
 
 
 def encode_jpeg_gray8(
@@ -1581,99 +1557,30 @@ def encode_jpeg_rgb24(
     )
 
 
-class _BitReader:
-    """Entropy-segment bit reader with 0xFF00 unstuffing; raises on any
-    embedded marker mid-symbol.  Restart markers are consumed only at the
-    explicit ``restart_sync`` call sites the MCU loop schedules from the
-    DRI interval — an RSTn reached any other way is stream corruption."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.acc = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        b = self.data[self.pos]
-        self.pos += 1
-        if b == 0xFF:
-            nxt = self.data[self.pos]
-            if nxt == 0x00:
-                self.pos += 1
-            else:
-                raise ValueError(f"unexpected marker FF{nxt:02X} in scan")
-        # only ever called with the accumulator drained (nbits == 0) —
-        # REPLACE it rather than shift-or, or acc grows into an unbounded
-        # bigint and decode goes quadratic in scan length (review catch r6)
-        self.acc = b
-        self.nbits = 8
-
-    def bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.acc >> self.nbits) & 1
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart_sync(self) -> int:
-        """Discard the pad bits of the current byte and consume one RSTm
-        marker; returns m (0–7) for the caller's cycle check.  After the
-        discard, ``pos`` is always AT the marker: a partially-read pad
-        byte lives in the accumulator (``_fill`` already consumed its
-        stuffed 0x00 if it was 0xFF), and an exactly-byte-aligned MCU
-        leaves no pad byte at all (T.81 §B.2.1 fill-bit rule)."""
-        self.nbits = 0
-        if (
-            self.pos + 1 >= len(self.data)
-            or self.data[self.pos] != 0xFF
-            or not (0xD0 <= self.data[self.pos + 1] <= 0xD7)
-        ):
-            raise ValueError("missing JPEG restart marker")
-        m = self.data[self.pos + 1] & 0x07
-        self.pos += 2
-        return m
-
-
 def _jpeg_extend(amp: int, size: int) -> int:
     if size == 0:
         return 0
     return amp if amp >= (1 << (size - 1)) else amp - (1 << size) + 1
 
 
-_HUFF_LUT_CACHE: dict = {}
-
-
 def _huff_lut(
-    tab: dict[tuple[int, int], int],
-) -> tuple[list[int], list[int], int]:
-    """Flat decode table for a canonical-huffman dict {(length, code):
+    tab: Mapping[tuple[int, int], int],
+) -> tuple[tuple[int, ...], tuple[int, ...], int]:
+    """Flat decode table for a canonical-huffman mapping {(length, code):
     sym}: ``(syms, lens, L)`` where indexing with the next ``L`` stream
     bits yields the symbol and its true length in one lookup (length 0 =
     invalid prefix).  Prefix-freeness makes this exactly equivalent to
-    the bit-at-a-time :func:`_read_huff_sym` walk.  Cached — the Annex-K
-    tables recur on every decode call (§4.5)."""
-    key = tuple(sorted(tab.items()))
-    hit = _HUFF_LUT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    the bit-at-a-time walk over the mapping.  Built once per DHT payload
+    by :func:`_parse_dht`'s cache."""
     max_len = max((ln for ln, _ in tab), default=1)
     syms = np.zeros(1 << max_len, dtype=np.int32)
     lens = np.zeros(1 << max_len, dtype=np.int32)
-    for (ln, code), sym in key:
+    for (ln, code), sym in sorted(tab.items()):
         base = code << (max_len - ln)
         span = 1 << (max_len - ln)
         syms[base : base + span] = sym
         lens[base : base + span] = ln
-    if len(_HUFF_LUT_CACHE) > 64:  # foreign corpora: bound the cache
-        _HUFF_LUT_CACHE.clear()
-    out = (syms.tolist(), lens.tolist(), max_len)
-    _HUFF_LUT_CACHE[key] = out
-    return out
+    return tuple(syms.tolist()), tuple(lens.tolist()), max_len
 
 
 class _FastBits:
@@ -1781,7 +1688,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    htables: dict[tuple[int, int], _HuffTable] = {}
     comps: list[tuple[int, int, int, int]] = []  # (id, hs, vs, tq)
     h = w = None
     scan_comps: list[tuple[int, int, int]] = []  # (id, dc_table, ac_table)
@@ -1917,8 +1824,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     preds = [0] * len(comps)
     tabs = {cid: (dc, ac) for cid, dc, ac in scan_comps}
     luts = [
-        (_huff_lut(htables[(0, tabs[cid][0])]),
-         _huff_lut(htables[(1, tabs[cid][1])]))
+        (htables[(0, tabs[cid][0])].lut, htables[(1, tabs[cid][1])].lut)
         for cid, _hs, _vs, _tq in comps
     ]
     mcu_idx = 0
@@ -2297,7 +2203,7 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    htables: dict[tuple[int, int], _HuffTable] = {}
     comps: list[tuple[int, int, int, int]] = []
     h = w = None
     hmax = vmax = 1
@@ -2435,7 +2341,7 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
                     ]
                 dcluts = {
                     ci: (
-                        _huff_lut(htables[(0, dc)])
+                        htables[(0, dc)].lut
                         if (0, dc) in htables
                         else None
                     )
@@ -2487,7 +2393,7 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
                 tab = htables.get((1, ac_t))
                 if tab is None:
                     raise ValueError("missing AC huffman table")
-                asyms, alens, aL = _huff_lut(tab)
+                asyms, alens, aL = tab.lut
                 bh_t, bw_t = _true_block_grid(
                     h, w, comps[ci0][1], comps[ci0][2], hmax, vmax
                 )
@@ -2671,6 +2577,74 @@ def _decode_jpeg_progressive(data: bytes) -> np.ndarray:
     return _planes_to_pixels(planes, comps, hmax, vmax, h, w)
 
 
+def _row_audit(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    row_fn: Callable[[np.ndarray], tuple],
+    ddl: str,
+) -> DataFrame:
+    """Shared Spark stage of the codec-contract audits: rows whose
+    ``text_col`` holds fewer than ``n`` utf-8 bytes are filtered out (the
+    callers' oracles apply the same predicate); every other row's first
+    ``n`` bytes reach ``row_fn`` as a flat uint8 array, and the output row
+    is ``(id, n, *row_fn(raw))`` with column names, order and types taken
+    from ``ddl``.
+
+    Scale: a pure Arrow-batched ``mapInPandas`` behind one explicit
+    repartition — constant memory per batch; the codec is the per-row
+    work, exactly the shape a real decode stage has at 100 TB (where this
+    Python baseline swaps for a codec library via the pinned
+    ``_decode_bytes`` boundary)."""
+    names = [c.split()[0] for c in ddl.split(",")]
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = [int(i) for i in pdf["_id"]]
+            props = [
+                row_fn(
+                    np.frombuffer(str(t).encode("utf-8")[:n], dtype=np.uint8)
+                )
+                for t in pdf["_text"]
+            ]
+            cols = [ids, [n] * len(ids), *(list(c) for c in zip(*props))]
+            yield pd.DataFrame(dict(zip(names, cols)))
+
+    # The codec is CPU-bound per row, so parallelism must not be capped by
+    # the SOURCE layout (a small parquet arrives as one partition and one
+    # task would run every round trip serially — measured 4.4 s vs 1.2 s
+    # warm at sf0.1).  The repartition shuffle moves only (id, text)
+    # rows and is dwarfed by the per-row codec work it spreads out; at
+    # 100 TB the scan is already wide and AQE coalesces the excess.
+    width = df.sparkSession.sparkContext.defaultParallelism
+    return (
+        df.filter(F.octet_length(F.col(text_col)) >= n)
+        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
+        .repartition(width)
+        .mapInPandas(fn, ddl)
+    )
+
+
+def _is_jfif(payload: bytes) -> bool:
+    return payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
+
+
+def _max_abs_err(dec: np.ndarray, want: np.ndarray) -> int:
+    return int(np.abs(dec.astype(np.int64) - want.astype(np.int64)).max())
+
+
+def _rgb_derivative(img: np.ndarray) -> np.ndarray:
+    """(side, side, 3) image deterministic from the gray one alone:
+    channel 0 = the bytes, 1 = a rolled copy, 2 = the complement."""
+    return np.stack(
+        [img, np.roll(img.reshape(-1), 7).reshape(img.shape), 255 - img],
+        axis=-1,
+    )
+
+
 def jpeg_roundtrip_audit(
     df: DataFrame, id_col: str, text_col: str, side: int = 16
 ) -> DataFrame:
@@ -2689,60 +2663,17 @@ def jpeg_roundtrip_audit(
     sf1.0 ladder is why the bound is the analytic envelope and not the
     empirical max: 29212 of 29213 corpus docs round-trip at |Δ| ≤ 1, and
     exactly one reaches 2.  Rows with fewer than ``side²`` bytes are
-    filtered out (the caller's oracle applies the same predicate).
+    filtered out (the caller's oracle applies the same predicate)."""
 
-    Scale: a pure Arrow-batched ``mapInPandas`` — no shuffle, constant
-    memory per batch; the codec is the per-row work, exactly the shape a
-    real decode stage has at 100 TB (where this Python baseline swaps
-    for a codec library via the pinned ``_decode_bytes`` boundary).
-    """
-    n = side * side
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        payload = encode_jpeg_gray8(img)
+        dec = _decode_jpeg(payload).reshape(side, side)
+        return _is_jfif(payload), _max_abs_err(dec, img) <= 3
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, jfif, ok = [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                payload = encode_jpeg_gray8(raw)
-                dec = _decode_jpeg(payload).reshape(side, side)
-                err = int(
-                    np.abs(dec.astype(np.int64) - raw.astype(np.int64)).max()
-                )
-                ids.append(int(i))
-                jfif.append(
-                    payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
-                )
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_jfif": jfif,
-                    "max_err_le_3": ok,
-                }
-            )
-
-    # The codec is CPU-bound per row, so parallelism must not be capped by
-    # the SOURCE layout (a small parquet arrives as one partition and one
-    # task would run every round trip serially — measured 4.4 s vs 1.2 s
-    # warm at sf0.1).  The repartition shuffle moves only (id, text)
-    # rows and is dwarfed by the per-row codec work it spreads out; at
-    # 100 TB the scan is already wide and AQE coalesces the excess.
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_jfif boolean, "
-            "max_err_le_3 boolean",
-        )
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, is_jfif boolean, max_err_le_3 boolean",
     )
 
 
@@ -2770,56 +2701,22 @@ def jpeg420_roundtrip_audit(
     IDCT gain 3.49 + final rounding 0.5 < 4, i.e. an integer deviation
     of 4+ is impossible for a correct codec.  An MCU-order slip, a
     swapped chroma block, or a broken upsampler lands far outside."""
-    n = side * side
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, jfif, sof420, ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                rgb = np.repeat(raw[..., None], 3, axis=2)
-                payload = encode_jpeg_rgb24(rgb, subsampling="4:2:0")
-                dec = _decode_jpeg(payload).reshape(side, side, 3)
-                err = int(
-                    np.abs(dec.astype(np.int64) - rgb.astype(np.int64)).max()
-                )
-                sof_at = payload.find(b"\xff\xc0")
-                ids.append(int(i))
-                jfif.append(
-                    payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
-                )
-                sof420.append(
-                    sof_at >= 0 and payload[sof_at + 11] == 0x22
-                )
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_jfif": jfif,
-                    "sof_is_420": sof420,
-                    "max_err_le_3": ok,
-                }
-            )
-
-    # Same shape rationale as jpeg_roundtrip_audit: CPU-bound per row, so
-    # spread across defaultParallelism instead of inheriting a narrow
-    # source layout.
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_jfif boolean, "
-            "sof_is_420 boolean, max_err_le_3 boolean",
+    def row(raw: np.ndarray) -> tuple:
+        rgb = np.repeat(raw.reshape(side, side)[..., None], 3, axis=2)
+        payload = encode_jpeg_rgb24(rgb, subsampling="4:2:0")
+        dec = _decode_jpeg(payload).reshape(side, side, 3)
+        sof_at = payload.find(b"\xff\xc0")
+        return (
+            _is_jfif(payload),
+            sof_at >= 0 and payload[sof_at + 11] == 0x22,
+            _max_abs_err(dec, rgb) <= 3,
         )
+
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, is_jfif boolean, "
+        "sof_is_420 boolean, max_err_le_3 boolean",
     )
 
 
@@ -2847,62 +2744,25 @@ def jpeg_restart_roundtrip_audit(
     reset DC predictors, they add no quantization term, so the bound
     carries over unchanged.  A predictor that fails to reset, a marker
     cycle slip, or a byte-alignment bug lands far outside (the DC error
-    alone shifts whole blocks).
+    alone shifts whole blocks)."""
 
-    Scale: pure Arrow-batched ``mapInPandas`` behind an explicit
-    repartition — same shape as the other codec audits."""
-    n = side * side
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, jfif, rst, ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                payload = encode_jpeg_gray8(
-                    raw, restart_interval=restart_interval
-                )
-                dec = _decode_jpeg(payload).reshape(side, side)
-                err = int(
-                    np.abs(dec.astype(np.int64) - raw.astype(np.int64)).max()
-                )
-                sos = payload.find(b"\xff\xda")
-                scan = payload[sos:]
-                ids.append(int(i))
-                jfif.append(
-                    payload[:2] == b"\xff\xd8" and payload[6:10] == b"JFIF"
-                )
-                rst.append(
-                    b"\xff\xdd" in payload[:sos]
-                    and any(
-                        bytes([0xFF, 0xD0 + m]) in scan for m in range(8)
-                    )
-                )
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_jfif": jfif,
-                    "has_restarts": rst,
-                    "max_err_le_3": ok,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_jfif boolean, "
-            "has_restarts boolean, max_err_le_3 boolean",
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        payload = encode_jpeg_gray8(img, restart_interval=restart_interval)
+        dec = _decode_jpeg(payload).reshape(side, side)
+        sos = payload.find(b"\xff\xda")
+        scan = payload[sos:]
+        return (
+            _is_jfif(payload),
+            b"\xff\xdd" in payload[:sos]
+            and any(bytes([0xFF, 0xD0 + m]) in scan for m in range(8)),
+            _max_abs_err(dec, img) <= 3,
         )
+
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, is_jfif boolean, "
+        "has_restarts boolean, max_err_le_3 boolean",
     )
 
 
@@ -2923,53 +2783,23 @@ def jpeg_progressive_roundtrip_audit(
     every quantized coefficient exactly ((v>>1)<<1 | v&1 == v), so any
     scan-ordering, EOB-run, or refinement bug breaks equality outright —
     plus the SOF2 marker check and the |Δ| ≤ 3 envelope inherited from
-    the sequential contract.  Scale: pure Arrow-batched ``mapInPandas``
-    behind an explicit repartition, same as the other codec audits."""
-    n = side * side
+    the sequential contract."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, sof2, match, ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                prog = encode_jpeg_progressive(raw)
-                dec_p = _decode_jpeg(prog)
-                dec_s = _decode_jpeg(encode_jpeg_gray8(raw))
-                err = int(
-                    np.abs(
-                        dec_p.astype(np.int64).reshape(side, side)
-                        - raw.astype(np.int64)
-                    ).max()
-                )
-                ids.append(int(i))
-                sof2.append(0 <= prog.find(b"\xff\xc2") < prog.find(b"\xff\xda"))
-                match.append(bool(np.array_equal(dec_p, dec_s)))
-                ok.append(err <= 3)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_sof2": sof2,
-                    "matches_sequential": match,
-                    "max_err_le_3": ok,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_sof2 boolean, "
-            "matches_sequential boolean, max_err_le_3 boolean",
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        prog = encode_jpeg_progressive(img)
+        dec_p = _decode_jpeg(prog)
+        dec_s = _decode_jpeg(encode_jpeg_gray8(img))
+        return (
+            0 <= prog.find(b"\xff\xc2") < prog.find(b"\xff\xda"),
+            bool(np.array_equal(dec_p, dec_s)),
+            _max_abs_err(dec_p.reshape(side, side), img) <= 3,
         )
+
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, is_sof2 boolean, "
+        "matches_sequential boolean, max_err_le_3 boolean",
     )
 
 
@@ -3119,7 +2949,7 @@ def _decode_jpeg_lossless(data: bytes) -> np.ndarray:
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     pos = 2
-    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    htables: dict[tuple[int, int], _HuffTable] = {}
     comps: list[tuple[int, int, int, int]] = []
     h = w = None
     predictor = 0
@@ -3193,8 +3023,7 @@ def _decode_jpeg_lossless(data: bytes) -> np.ndarray:
     mb = _min_bits_per_lossless_sample(tabs)
     if n_samples * mb > max(0, len(data) - scan_pos) * 8 + 64 * mb:
         raise ValueError("JPEG scan too short for declared dims")
-    br = _BitReader(data, scan_pos)
-    planes = _lossless_entropy_scan(br, h, w, tabs, predictor)
+    planes, _ = _lossless_entropy_scan(data, scan_pos, h, w, tabs, predictor)
     out = [np.clip(p, 0, 255).astype(np.uint8) for p in planes]
     if n_comp == 1:
         return out[0].reshape(-1)
@@ -3202,16 +3031,19 @@ def _decode_jpeg_lossless(data: bytes) -> np.ndarray:
 
 
 def _lossless_entropy_scan(
-    br: "_BitReader",
+    data: bytes,
+    pos: int,
     h: int,
     w: int,
-    tabs: list[dict],
+    tabs: list[_HuffTable],
     predictor: int,
     refs: list[np.ndarray] | None = None,
-) -> list[np.ndarray]:
-    """Decode ONE interleaved 1×1-sampling lossless entropy scan into
-    int32 planes — shared by the standalone SOF3 decoder and both frame
-    kinds of the hierarchical decoder.  ``predictor`` in 1–7 runs the
+) -> tuple[list[np.ndarray], int]:
+    """Decode ONE interleaved 1×1-sampling lossless entropy scan starting
+    at byte ``pos`` of ``data`` into int32 planes; returns the planes and
+    the stuffed-stream byte offset just past the bytes the scan consumed
+    — shared by the standalone SOF3 decoder and both frame kinds of the
+    hierarchical decoder.  ``predictor`` in 1–7 runs the
     Annex-H neighbor prediction (first line / line-start rules per
     H.1.1); ``predictor == 0`` is the DIFFERENTIAL form (T.81 Annex J):
     no spatial prediction — each decoded difference adds to the
@@ -3221,11 +3053,11 @@ def _lossless_entropy_scan(
     # table-driven fast scan: one LUT lookup per symbol over a
     # preprocessed unstuffed segment instead of ~length bit() calls
     # (§4.2); prefix-freeness makes the LUT walk exactly equivalent to
-    # _read_huff_sym, and _FastBits.orig_pos restores the byte cursor
-    # the hierarchical scan-to-scan walk needs.
-    fb = _FastBits(br.data, br.pos)
+    # the bit-at-a-time walk, and _FastBits.orig_pos gives the byte
+    # cursor the hierarchical scan-to-scan walk needs.
+    fb = _FastBits(data, pos)
     words, nbits_total = fb.words, fb.nbits
-    luts = [_huff_lut(t) for t in tabs]
+    luts = [t.lut for t in tabs]
     n = h * w
     res = [0] * (n * n_comp)
     p = 0
@@ -3257,7 +3089,7 @@ def _lossless_entropy_scan(
                 )
             i += 1
     fb.pos = p
-    br.pos = fb.orig_pos()
+    end = fb.orig_pos()
     d3 = np.array(res, dtype=np.int64).reshape(n, n_comp)
     # ---- 2. reconstruct each plane from its residual grid ----------------
     # mod-2^16 adds are associative, so every predictor whose recurrence
@@ -3331,7 +3163,7 @@ def _lossless_entropy_scan(
                 rows.append(cur)
             grid = np.array(rows, dtype=np.int64)
         planes.append(grid.astype(np.int32))
-    return planes
+    return planes, end
 
 
 # ---------------------------------------------------------------------------
@@ -3488,7 +3320,7 @@ def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     pos = 2
-    htables: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
+    htables: dict[tuple[int, int], _HuffTable] = {}
     full = None  # (h, w, comps) from DHP
     refs: list[np.ndarray] | None = None
     cur = None  # (h, w, comps, differential) of the frame awaiting its scan
@@ -3607,16 +3439,13 @@ def _decode_jpeg_hierarchical(data: bytes) -> np.ndarray:
                     raise ValueError(
                         "differential frame without preceding EXP"
                     )
-                br = _BitReader(data, pos)
-                refs = _lossless_entropy_scan(
-                    br, fh, fw, tabs, 0, refs=refs
+                refs, pos = _lossless_entropy_scan(
+                    data, pos, fh, fw, tabs, 0, refs=refs
                 )
             else:
                 if not 1 <= ss <= 7:
                     raise ValueError(f"bad lossless predictor {ss}")
-                br = _BitReader(data, pos)
-                refs = _lossless_entropy_scan(br, fh, fw, tabs, ss)
-            pos = br.pos
+                refs, pos = _lossless_entropy_scan(data, pos, fh, fw, tabs, ss)
             cur = None
     if full is None or refs is None:
         raise ValueError("JPEG missing DHP/frames")
@@ -3637,70 +3466,34 @@ def jpeg_lossless_roundtrip_audit(
     exercising the SOF3 predictive path.  Each qualifying row's first
     ``side²`` utf-8 bytes become a gray (side, side) image encoded with
     EVERY one of the 7 Annex-H predictors, and an RGB derivative
-    (channel 0 = the bytes, 1 = a rolled copy, 2 = the complement —
-    deterministic from the text alone) encoded with the default
-    predictor; the contract pins EXACT byte equality on every decode —
-    the property only the lossless process can promise, so any
-    prediction, residual, or interleave bug breaks equality outright.
-    Scale: pure Arrow-batched ``mapInPandas`` behind an explicit
-    repartition, same as the other codec audits."""
-    n = side * side
+    (:func:`_rgb_derivative`) encoded with the default predictor; the
+    contract pins EXACT byte equality on every decode — the property
+    only the lossless process can promise, so any prediction, residual,
+    or interleave bug breaks equality outright."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, sof3, gray_ok, rgb_ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                enc0 = encode_jpeg_lossless(raw, predictor=4)
-                g_ok = all(
-                    np.array_equal(
-                        _decode_jpeg(encode_jpeg_lossless(raw, predictor=p)),
-                        raw.reshape(-1),
-                    )
-                    for p in range(1, 8)
-                )
-                rgb = np.stack(
-                    [
-                        raw,
-                        np.roll(raw.reshape(-1), 7).reshape(side, side),
-                        255 - raw,
-                    ],
-                    axis=-1,
-                )
-                r_ok = np.array_equal(
-                    _decode_jpeg(encode_jpeg_lossless(rgb)), rgb.reshape(-1)
-                )
-                ids.append(int(i))
-                sof3.append(
-                    0 <= enc0.find(b"\xff\xc3") < enc0.find(b"\xff\xda")
-                )
-                gray_ok.append(bool(g_ok))
-                rgb_ok.append(bool(r_ok))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_sof3": sof3,
-                    "gray_exact_all_predictors": gray_ok,
-                    "rgb_exact": rgb_ok,
-                }
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        enc0 = encode_jpeg_lossless(img, predictor=4)
+        g_ok = all(
+            np.array_equal(
+                _decode_jpeg(encode_jpeg_lossless(img, predictor=p)), raw
             )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_sof3 boolean, "
-            "gray_exact_all_predictors boolean, rgb_exact boolean",
+            for p in range(1, 8)
         )
+        rgb = _rgb_derivative(img)
+        r_ok = np.array_equal(
+            _decode_jpeg(encode_jpeg_lossless(rgb)), rgb.reshape(-1)
+        )
+        return (
+            0 <= enc0.find(b"\xff\xc3") < enc0.find(b"\xff\xda"),
+            bool(g_ok),
+            bool(r_ok),
+        )
+
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, is_sof3 boolean, "
+        "gray_exact_all_predictors boolean, rgb_exact boolean",
     )
 
 
@@ -3712,78 +3505,39 @@ def jpeg_hierarchical_roundtrip_audit(
     row's first ``side²`` utf-8 bytes become a gray (side, side) image
     encoded at EVERY level count 1–3 (1 = DHP + single SOF3 frame,
     2–3 = real pyramids with one/two differential frames), and an RGB
-    derivative (channel 0 = the bytes, 1 = a rolled copy, 2 = the
-    complement — deterministic from the text alone) encoded at
-    levels=2; the contract pins EXACT byte equality on every decode —
-    the self-correcting differential frame makes equality the provable
+    derivative (:func:`_rgb_derivative`) encoded at levels=2; the
+    contract pins EXACT byte equality on every decode — the
+    self-correcting differential frame makes equality the provable
     property, so any expansion, residual, or frame-sequencing bug
-    breaks it outright.  Scale: pure Arrow-batched ``mapInPandas``
-    behind an explicit repartition, same as the other codec audits."""
-    n = side * side
+    breaks it outright."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, dhp, gray_ok, rgb_ok = [], [], [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                enc2 = encode_jpeg_hierarchical(raw, levels=2)
-                # enc2 serves both the marker check and the lv=2 decode —
-                # the encoder is a per-sample bit loop, don't run it twice
-                g_ok = np.array_equal(
-                    _decode_jpeg(enc2), raw.reshape(-1)
-                ) and all(
-                    np.array_equal(
-                        _decode_jpeg(
-                            encode_jpeg_hierarchical(raw, levels=lv)
-                        ),
-                        raw.reshape(-1),
-                    )
-                    for lv in (1, 3)
-                )
-                rgb = np.stack(
-                    [
-                        raw,
-                        np.roll(raw.reshape(-1), 7).reshape(side, side),
-                        255 - raw,
-                    ],
-                    axis=-1,
-                )
-                r_ok = np.array_equal(
-                    _decode_jpeg(encode_jpeg_hierarchical(rgb, levels=2)),
-                    rgb.reshape(-1),
-                )
-                ids.append(int(i))
-                dhp.append(
-                    0 <= enc2.find(b"\xff\xde") < enc2.find(b"\xff\xc3")
-                    and enc2.count(b"\xff\xc7") == 1
-                )
-                gray_ok.append(bool(g_ok))
-                rgb_ok.append(bool(r_ok))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "is_dhp": dhp,
-                    "gray_exact_all_levels": gray_ok,
-                    "rgb_exact": rgb_ok,
-                }
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        enc2 = encode_jpeg_hierarchical(img, levels=2)
+        # enc2 serves both the marker check and the lv=2 decode —
+        # the encoder is a per-sample bit loop, don't run it twice
+        g_ok = np.array_equal(_decode_jpeg(enc2), raw) and all(
+            np.array_equal(
+                _decode_jpeg(encode_jpeg_hierarchical(img, levels=lv)), raw
             )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, is_dhp boolean, "
-            "gray_exact_all_levels boolean, rgb_exact boolean",
+            for lv in (1, 3)
         )
+        rgb = _rgb_derivative(img)
+        r_ok = np.array_equal(
+            _decode_jpeg(encode_jpeg_hierarchical(rgb, levels=2)),
+            rgb.reshape(-1),
+        )
+        return (
+            0 <= enc2.find(b"\xff\xde") < enc2.find(b"\xff\xc3")
+            and enc2.count(b"\xff\xc7") == 1,
+            bool(g_ok),
+            bool(r_ok),
+        )
+
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, is_dhp boolean, "
+        "gray_exact_all_levels boolean, rgb_exact boolean",
     )
 
 
@@ -3797,63 +3551,31 @@ def png_palette_roundtrip_audit(
     4-bit-indexed image through a 16-step gray ramp (decode ==
     (byte >> 4) * 17), and (c) a 1-bit image through a black/white
     palette (decode == (byte >> 7) * 255) — each encoded plain AND
-    Adam7-interlaced, all six streams pinned to exact equality.  Scale:
-    pure Arrow-batched ``mapInPandas`` behind an explicit repartition,
-    same as the other codec audits."""
-    n = side * side
+    Adam7-interlaced, all six streams pinned to exact equality."""
+    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
+    bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
+    cases = [  # (palette, bit depth, index fn, expected fn)
+        (gray, 8, lambda b: b, lambda b: b),
+        (ramp16, 4, lambda b: b >> 4, lambda b: (b >> 4) * 17),
+        (bw, 1, lambda b: b >> 7, lambda b: (b >> 7) * 255),
+    ]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        ramp16 = np.stack(
-            [np.arange(16, dtype=np.uint8) * 17] * 3, axis=1
-        )
-        bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
-        cases = [  # (palette, bit depth, index fn, expected fn)
-            (gray, 8, lambda b: b, lambda b: b),
-            (ramp16, 4, lambda b: b >> 4, lambda b: (b >> 4) * 17),
-            (bw, 1, lambda b: b >> 7, lambda b: (b >> 7) * 255),
-        ]
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        for pal, depth, f_idx, f_want in cases:
+            idx, want = f_idx(img), f_want(img).reshape(-1)
+            for inter in (False, True):
+                enc = encode_png_indexed(
+                    idx, pal, bit_depth=depth, interlace=inter
+                )
+                if not np.array_equal(_decode_png(enc), want):
+                    return (False,)
+        return (True,)
 
-        def ok(raw):
-            for pal, depth, f_idx, f_want in cases:
-                idx = f_idx(raw)
-                want = f_want(raw).reshape(-1)
-                for inter in (False, True):
-                    enc = encode_png_indexed(
-                        idx, pal, bit_depth=depth, interlace=inter
-                    )
-                    if not np.array_equal(_decode_png(enc), want):
-                        return False
-            return True
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "palette_adam7_exact": exact,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, palette_adam7_exact boolean",
-        )
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, palette_adam7_exact boolean",
     )
 
 
@@ -3867,69 +3589,36 @@ def png_full_surface_roundtrip_audit(
     row's first ``side²`` utf-8 bytes: sub-byte gray decodes to the
     bit-replication scaling (×255/×85/×17), depth 16 to the high byte
     (low bytes deliberately nonzero so a lane/endianness bug breaks the
-    pin), multi-channel to the interleaved per-channel samples.  Scale:
-    pure Arrow-batched ``mapInPandas`` behind an explicit repartition,
-    same as the other codec audits."""
-    n = side * side
+    pin), multi-channel to the interleaved per-channel samples."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def ok(raw: np.ndarray) -> bool:
-            r16 = raw.astype(np.uint16)
-            gray_cases = [  # (px, depth, want)
-                (raw, 8, raw),
-                ((r16 << 8) | ((r16 * 7 + 3) & 0xFF), 16, raw),
-                (raw >> 7, 1, (raw >> 7) * 255),
-                (raw >> 6, 2, (raw >> 6) * 85),
-                (raw >> 4, 4, (raw >> 4) * 17),
-            ]
-            chans = [raw, 255 - raw, raw >> 1, raw | 1]
-            multi_cases = []
-            for ct, nch in ((2, 3), (4, 2), (6, 4)):
-                px8 = np.stack(chans[:nch], axis=-1)
-                multi_cases.append((px8, ct, 8, px8))
-                px16 = (px8.astype(np.uint16) << 8) | (
-                    (px8.astype(np.uint16) * 11 + 5) & 0xFF
-                )
-                multi_cases.append((px16, ct, 16, px8))
-            for inter in (False, True):
-                for px, depth, want in gray_cases:
-                    dec = _decode_png(encode_png(px, 0, depth, inter))
-                    if not np.array_equal(dec, want.reshape(-1)):
-                        return False
-                for px, ct, depth, want in multi_cases:
-                    dec = _decode_png(encode_png(px, ct, depth, inter))
-                    if not np.array_equal(dec, want.reshape(-1)):
-                        return False
-            return True
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "full_surface_exact": exact,
-                }
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        r16 = img.astype(np.uint16)
+        cases = [  # (px, color type, depth, want)
+            (img, 0, 8, img),
+            ((r16 << 8) | ((r16 * 7 + 3) & 0xFF), 0, 16, img),
+            (img >> 7, 0, 1, (img >> 7) * 255),
+            (img >> 6, 0, 2, (img >> 6) * 85),
+            (img >> 4, 0, 4, (img >> 4) * 17),
+        ]
+        chans = [img, 255 - img, img >> 1, img | 1]
+        for ct, nch in ((2, 3), (4, 2), (6, 4)):
+            px8 = np.stack(chans[:nch], axis=-1)
+            cases.append((px8, ct, 8, px8))
+            px16 = (px8.astype(np.uint16) << 8) | (
+                (px8.astype(np.uint16) * 11 + 5) & 0xFF
             )
+            cases.append((px16, ct, 16, px8))
+        for inter in (False, True):
+            for px, ct, depth, want in cases:
+                dec = _decode_png(encode_png(px, ct, depth, inter))
+                if not np.array_equal(dec, want.reshape(-1)):
+                    return (False,)
+        return (True,)
 
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, full_surface_exact boolean",
-        )
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, full_surface_exact boolean",
     )
 
 
@@ -3942,64 +3631,30 @@ def bmp_surface_roundtrip_audit(
     the pre-existing gray8 path — 6 encode/decode round-trips per
     qualifying row, expected output closed-form from the row's first
     ``side²`` utf-8 bytes through the same palette conventions as the
-    PNG contract.  Scale: pure Arrow-batched ``mapInPandas`` behind an
-    explicit repartition, same as the other codec audits."""
-    n = side * side
+    PNG contract."""
+    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
+    bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
+    cases = [  # (palette, depth, rle, index fn, expected fn)
+        (gray, 8, False, lambda b: b, lambda b: b),
+        (gray, 8, True, lambda b: b, lambda b: b),
+        # run-heavy RLE: quantized rows compress into long runs
+        (gray, 8, True, lambda b: b & 0xF0, lambda b: b & 0xF0),
+        (ramp16, 4, False, lambda b: b >> 4, lambda b: (b >> 4) * 17),
+        (bw, 1, False, lambda b: b >> 7, lambda b: (b >> 7) * 255),
+    ]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
-        ramp16 = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3, axis=1)
-        bw = np.array([[0, 0, 0], [255, 255, 255]], dtype=np.uint8)
+    def row(raw: np.ndarray) -> tuple:
+        img = raw.reshape(side, side)
+        for pal, depth, rle, f_idx, f_want in cases:
+            enc = encode_bmp_indexed(f_idx(img), pal, bit_depth=depth, rle=rle)
+            if not np.array_equal(_decode_bmp(enc), f_want(img).reshape(-1)):
+                return (False,)
+        return (np.array_equal(_decode_bmp(encode_bmp_gray8(img)), raw),)
 
-        def ok(raw: np.ndarray) -> bool:
-            cases = [  # (palette, depth, rle, index fn, expected fn)
-                (gray, 8, False, lambda b: b, lambda b: b),
-                (gray, 8, True, lambda b: b, lambda b: b),
-                # run-heavy RLE: quantized rows compress into long runs
-                (gray, 8, True, lambda b: b & 0xF0, lambda b: b & 0xF0),
-                (ramp16, 4, False, lambda b: b >> 4, lambda b: (b >> 4) * 17),
-                (bw, 1, False, lambda b: b >> 7, lambda b: (b >> 7) * 255),
-            ]
-            for pal, depth, rle, f_idx, f_want in cases:
-                enc = encode_bmp_indexed(
-                    f_idx(raw), pal, bit_depth=depth, rle=rle
-                )
-                if not np.array_equal(
-                    _decode_bmp(enc), f_want(raw).reshape(-1)
-                ):
-                    return False
-            return np.array_equal(
-                _decode_bmp(encode_bmp_gray8(raw)), raw.reshape(-1)
-            )
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                ).reshape(side, side)
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_pixels": [n] * len(ids),
-                    "bmp_surface_exact": exact,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_pixels long, bmp_surface_exact boolean",
-        )
+    return _row_audit(
+        df, id_col, text_col, side * side, row,
+        "doc_id long, n_pixels long, bmp_surface_exact boolean",
     )
 
 
@@ -4012,77 +3667,36 @@ def wav_pcm_surface_roundtrip_audit(
     deeper depth plants the byte in the TOP byte of the offset-binary
     value with deliberately nonzero low bytes, so the decode reduction
     must recover the byte exactly (an endianness, packing, or sign-flip
-    bug breaks the pin).  Scale: pure Arrow-batched ``mapInPandas``
-    behind an explicit repartition, same as the other codec audits."""
+    bug breaks the pin)."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def ok(raw: np.ndarray) -> bool:
-            r = raw.astype(np.int64)
-            cases = [  # (samples array, bits kwarg, expected flat bytes)
-                (raw, None, raw),
-                (
-                    (((r - 128) << 8) + ((r * 3 + 1) & 0xFF)).astype(np.int16),
-                    None,
-                    raw,
+    def row(raw: np.ndarray) -> tuple:
+        r = raw.astype(np.int64)
+        cases = [  # (mono samples, bits kwarg or None for the dtype's own)
+            (raw, None),
+            ((((r - 128) << 8) + ((r * 3 + 1) & 0xFF)).astype(np.int16), None),
+            (
+                (((r - 128) << 16) + ((r * 5 + 7) & 0xFFFF)).astype(np.int32),
+                24,
+            ),
+            (
+                (((r - 128) << 24) + ((r * 9 + 11) & 0xFFFFFF)).astype(
+                    np.int32
                 ),
-                (
-                    (((r - 128) << 16) + ((r * 5 + 7) & 0xFFFF)).astype(
-                        np.int32
-                    ),
-                    24,
-                    raw,
-                ),
-                (
-                    (((r - 128) << 24) + ((r * 9 + 11) & 0xFFFFFF)).astype(
-                        np.int32
-                    ),
-                    None,
-                    raw,
-                ),
-            ]
-            for mono, bits, want in cases:
-                stereo = np.stack(
-                    [mono, mono[::-1]], axis=1
-                )  # (n, 2) interleaved frames
-                want2 = np.stack([want, want[::-1]], axis=1).reshape(-1)
-                for s, w in ((mono, want), (stereo, want2)):
-                    enc = (
-                        encode_wav_pcm(s, bits=bits)
-                        if bits
-                        else encode_wav_pcm(s)
-                    )
-                    if not np.array_equal(_decode_wav(enc), w):
-                        return False
-            return True
+                None,
+            ),
+        ]
+        stereo_want = np.stack([raw, raw[::-1]], axis=1).reshape(-1)
+        for mono, bits in cases:
+            stereo = np.stack([mono, mono[::-1]], axis=1)  # (n, 2) frames
+            for s, want in ((mono, raw), (stereo, stereo_want)):
+                enc = encode_wav_pcm(s, bits=bits)
+                if not np.array_equal(_decode_wav(enc), want):
+                    return (False,)
+        return (True,)
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, exact = [], []
-            for i, t in zip(pdf["_id"], pdf["_text"]):
-                raw = np.frombuffer(
-                    str(t).encode("utf-8")[:n], dtype=np.uint8
-                )
-                ids.append(int(i))
-                exact.append(bool(ok(raw)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_samples": [n] * len(ids),
-                    "pcm_surface_exact": exact,
-                }
-            )
-
-    spark = df.sparkSession
-    width = spark.sparkContext.defaultParallelism
-    return (
-        df.filter(F.octet_length(F.col(text_col)) >= n)
-        .select(F.col(id_col).alias("_id"), F.col(text_col).alias("_text"))
-        .repartition(width)
-        .mapInPandas(
-            fn,
-            "doc_id long, n_samples long, pcm_surface_exact boolean",
-        )
+    return _row_audit(
+        df, id_col, text_col, n, row,
+        "doc_id long, n_samples long, pcm_surface_exact boolean",
     )
 
 

@@ -14,16 +14,11 @@ from pyspark.sql import functions as F
 
 from .operators import mining as mining_ops
 from .session import (
+    _t,
     drain_memory_sink,
-    load_tables,
     materialize_and_release,
     streaming_events,
 )
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, list(names))
-    return [tabs[n] for n in names]
 
 
 # ---------------------------------------------------------------------------

@@ -26,12 +26,7 @@ from pyspark.sql import functions as F
 
 from .operators import aggregates as agg_ops
 from .operators import joins as join_ops
-from .session import load_tables
-
-
-def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
-    tabs = load_tables(spark, sf_dir, list(names))
-    return [tabs[n] for n in names]
+from .session import _t
 
 
 # ---------------------------------------------------------------------------
@@ -614,19 +609,20 @@ def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pct = agg_ops.exact_percentiles_distributed(
         events, "value", [0.5, 0.95, 0.99], ["event_type"]
     )
-    wide = pct.groupBy("event_type").agg(
+    wide = pct.groupBy(F.col("event_type").alias("_et")).agg(
         F.round(F.max(F.when(F.col("p") == 0.5, F.col("pct"))), 4).alias("p50"),
         F.round(F.max(F.when(F.col("p") == 0.95, F.col("pct"))), 4).alias("p95"),
         F.round(F.max(F.when(F.col("p") == 0.99, F.col("pct"))), 4).alias("p99"),
     )
     # n_events counts ALL rows (percentile skips only NULL values); the
-    # left join also keeps an all-NULL-value group's row, like percentile
+    # left join also keeps an all-NULL-value group's row, like percentile,
+    # and matches a NULL event_type null-safely, as groupBy groups it
     counts = events.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    return counts.join(wide, "event_type", "left").select(
-        "event_type", "p50", "p95", "p99", "n_events"
-    )
+    return counts.join(
+        wide, F.col("event_type").eqNullSafe(F.col("_et")), "left"
+    ).select("event_type", "p50", "p95", "p99", "n_events")
 
 
 SQL_EVENT_VALUE_PERCENTILES = """

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -207,3 +207,9 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
         df.createOrReplaceTempView(n)
         out[n] = df
     return out
+
+
+def _t(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
+    """The named tables from :func:`load_tables`, in argument order."""
+    tabs = load_tables(spark, sf_dir, list(names))
+    return [tabs[n] for n in names]
