@@ -145,17 +145,18 @@ def test_cooccurrence_cosine_matches_bruteforce_on_seeded_random(spark):
 def test_fuzzy_record_linkage_router_branches_identical(spark, monkeypatch):
     """The size-routed hybrid (r11) must return the SAME one-row audit
     from both physical plans: the reference block equi-join (roster at
-    or under SPARK_GRAFT_FUZZY_FASTSS_MIN) and the FastSS
+    or under FUZZY_FASTSS_MIN_ROWS) and the FastSS
     deletion-neighborhood form (above it)."""
+    from worlddatapipeline_spark import queries_mining
     from worlddatapipeline_spark.queries_mining import q_fuzzy_record_linkage
 
     sf_dir = "/root/testdata/sf0.001"
-    monkeypatch.setenv("SPARK_GRAFT_FUZZY_FASTSS_MIN", "1000000000")
+    monkeypatch.setattr(queries_mining, "FUZZY_FASTSS_MIN_ROWS", 1000000000)
     block = q_fuzzy_record_linkage(spark, sf_dir)
     block_rows = [tuple(r) for r in block.collect()]
     block_plan = block._jdf.queryExecution().executedPlan().toString()
 
-    monkeypatch.setenv("SPARK_GRAFT_FUZZY_FASTSS_MIN", "0")
+    monkeypatch.setattr(queries_mining, "FUZZY_FASTSS_MIN_ROWS", 0)
     fastss = q_fuzzy_record_linkage(spark, sf_dir)
     fastss_rows = [tuple(r) for r in fastss.collect()]
     fastss_plan = fastss._jdf.queryExecution().executedPlan().toString()

@@ -133,13 +133,14 @@ def test_planted_corpus_nonempty_at_real_sf(spark):
 def test_equi_depth_bins_router_branches_identical(spark, monkeypatch):
     """The r12 size-routed octile boundaries must produce IDENTICAL bins
     from the exact holistic percentile (rows under
-    SPARK_GRAFT_PCT_DIST_MIN) and the distributed rank form (above it)."""
+    PCT_DIST_MIN_ROWS) and the distributed rank form (above it)."""
+    from worlddatapipeline_spark.operators import aggregates
     from worlddatapipeline_spark.queries_analytics import q_equi_depth_bins
 
     sf = "/root/testdata/sf0.001"
-    monkeypatch.setenv("SPARK_GRAFT_PCT_DIST_MIN", "1000000000")
+    monkeypatch.setattr(aggregates, "PCT_DIST_MIN_ROWS", 1000000000)
     exact = sorted(tuple(r) for r in q_equi_depth_bins(spark, sf).collect())
-    monkeypatch.setenv("SPARK_GRAFT_PCT_DIST_MIN", "0")
+    monkeypatch.setattr(aggregates, "PCT_DIST_MIN_ROWS", 0)
     routed_df = q_equi_depth_bins(spark, sf)
     routed = sorted(tuple(r) for r in routed_df.collect())
     assert exact == routed

@@ -55,13 +55,14 @@ def test_idle_high_balance_customers_runs(spark):
 def test_event_value_percentiles_router_branches_identical(spark, monkeypatch):
     """The r12 size-routed percentile query must return IDENTICAL rows
     from both physical plans: the exact holistic ``percentile`` (rows
-    under SPARK_GRAFT_PCT_DIST_MIN) and the distributed rank form (above
+    under PCT_DIST_MIN_ROWS) and the distributed rank form (above
     it) — bit-equal doubles, not approximately equal."""
+    from worlddatapipeline_spark.operators import aggregates
     from worlddatapipeline_spark.queries_tpch import q_event_value_percentiles
 
-    monkeypatch.setenv("SPARK_GRAFT_PCT_DIST_MIN", "1000000000")
+    monkeypatch.setattr(aggregates, "PCT_DIST_MIN_ROWS", 1000000000)
     exact = sorted(tuple(r) for r in q_event_value_percentiles(spark, SF).collect())
-    monkeypatch.setenv("SPARK_GRAFT_PCT_DIST_MIN", "0")
+    monkeypatch.setattr(aggregates, "PCT_DIST_MIN_ROWS", 0)
     routed_df = q_event_value_percentiles(spark, SF)
     routed = sorted(tuple(r) for r in routed_df.collect())
     assert exact == routed
@@ -136,6 +137,7 @@ def test_event_value_percentiles_null_event_type_branches_identical(
     """Both router branches of event_value_percentiles must agree on a
     NULL event_type, including its n_events and an all-NULL-value group."""
     from worlddatapipeline_spark import queries_tpch
+    from worlddatapipeline_spark.operators import aggregates
 
     events = spark.createDataFrame(
         [(None, 1.0), (None, 2.5), (None, 9.0), ("view", 4.0),
@@ -144,9 +146,9 @@ def test_event_value_percentiles_null_event_type_branches_identical(
     )
     monkeypatch.setattr(queries_tpch, "_t", lambda *_: (events,))
     out = {}
-    for knob in ("1000000000", "0"):
-        monkeypatch.setenv("SPARK_GRAFT_PCT_DIST_MIN", knob)
+    for knob in (1000000000, 0):
+        monkeypatch.setattr(aggregates, "PCT_DIST_MIN_ROWS", knob)
         rows = queries_tpch.q_event_value_percentiles(spark, SF).collect()
         out[knob] = sorted((tuple(r) for r in rows), key=repr)
-    assert out["0"] == out["1000000000"]
-    assert len(out["0"]) == 3
+    assert out[0] == out[1000000000]
+    assert len(out[0]) == 3

@@ -10,6 +10,7 @@ import random
 
 from pyspark.sql import functions as F
 
+from worlddatapipeline_spark.operators.reconcile import table_versions
 from worlddatapipeline_spark.streaming import cdc
 
 KEYS = ["k"]
@@ -114,14 +115,15 @@ def test_stream_multi_batch_matches_one_shot(spark, tmp_path):
 
     final = cdc.current_state(spark, state_dir)
     assert _published(spark, final) == EXPECTED
-    # more than one micro-batch actually ran (pointer advanced past v1) and
-    # GC bounded the state copies to live + previous
+    # more than one micro-batch actually ran (the pointer advanced past the
+    # seed _v00000001 and the first batch's _v00000002) and GC bounded the
+    # state copies to live + previous
     import os
 
     with open(os.path.join(state_dir, "_CURRENT"), encoding="utf-8") as fh:
         live = fh.read().strip()
-    assert not live.startswith(("v0", "v1_"))
-    versions = [d for d in os.listdir(state_dir) if d.startswith("v")]
+    versions = table_versions(state_dir)
+    assert live == versions[-1] and live > "_v00000002"
     assert len(versions) <= 2
 
 
@@ -200,9 +202,10 @@ def test_stream_forced_kill_mid_stream_resumes_exactly_once(
     q = cdc.cdc_stream_into_dir(stream, snapshot, KEYS, SEQS, state_dir)
     with pytest.raises(Exception, match="injected mid-stream crash"):
         q.awaitTermination()
-    # died mid-stream: exactly two of the four file-batches committed
+    # died mid-stream: exactly two of the four file-batches committed on
+    # top of the seed (_v00000001)
     with open(os.path.join(state_dir, "_CURRENT"), encoding="utf-8") as fh:
-        assert fh.read().strip().startswith("v2_")
+        assert fh.read().strip() == "_v00000003" == table_versions(state_dir)[-1]
 
     monkeypatch.setattr(cdc, "cdc_state_merge", real_merge)
     stream2 = (
@@ -212,4 +215,58 @@ def test_stream_forced_kill_mid_stream_resumes_exactly_once(
     )
     q2 = cdc.cdc_stream_into_dir(stream2, snapshot, KEYS, SEQS, state_dir)
     q2.awaitTermination()
+    assert _published(spark, cdc.current_state(spark, state_dir)) == EXPECTED
+
+
+def test_stream_crash_before_pointer_swap_keeps_previous_state(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between a micro-batch's version write and the pointer swap
+    (the shared reconcile commit) leaves the previous state live; the
+    resume replays that batch and converges to the one-shot merge."""
+    import os
+
+    import pytest
+
+    from worlddatapipeline_spark.operators import reconcile
+
+    src = str(tmp_path / "changes")
+    os.makedirs(src)
+    seed_rows = [(1, "a0"), (2, "b0"), (5, "e")]
+    snapshot = spark.createDataFrame(seed_rows, "k int, v string")
+    state_dir = str(tmp_path / "state")
+    schema = _changes(spark, CHANGELOG).schema
+    first, second = CHANGELOG[:5], CHANGELOG[5:]
+
+    _changes(spark, first).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+    cdc.cdc_stream_into_dir(stream, snapshot, KEYS, SEQS, state_dir).awaitTermination()
+    live = table_versions(state_dir)[-1]
+    before = _published(spark, cdc.current_state(spark, state_dir))
+    assert before == _published(spark, cdc.cdc_state_merge(
+        _seed_state(spark, seed_rows), _changes(spark, first), KEYS, SEQS
+    ))
+
+    _changes(spark, second).coalesce(1).write.mode("append").parquet(src)
+    real_replace = os.replace
+
+    def crash_on_pointer(src_path, dst_path):
+        if os.path.basename(dst_path) == "_CURRENT":
+            raise RuntimeError("simulated crash before pointer swap")
+        return real_replace(src_path, dst_path)
+
+    monkeypatch.setattr(reconcile.os, "replace", crash_on_pointer)
+    stream2 = spark.readStream.schema(schema).parquet(src)
+    q = cdc.cdc_stream_into_dir(stream2, snapshot, KEYS, SEQS, state_dir)
+    with pytest.raises(Exception, match="simulated crash before pointer swap"):
+        q.awaitTermination()
+    monkeypatch.undo()
+    # the batch's version was written but never published
+    with open(os.path.join(state_dir, "_CURRENT"), encoding="utf-8") as fh:
+        assert fh.read().strip() == live
+    assert table_versions(state_dir)[-1] > live
+    assert _published(spark, cdc.current_state(spark, state_dir)) == before
+
+    stream3 = spark.readStream.schema(schema).parquet(src)
+    cdc.cdc_stream_into_dir(stream3, snapshot, KEYS, SEQS, state_dir).awaitTermination()
     assert _published(spark, cdc.current_state(spark, state_dir)) == EXPECTED

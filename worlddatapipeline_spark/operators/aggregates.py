@@ -275,6 +275,14 @@ def skyline_2d(
     return materialize_and_release(out, remnant)
 
 
+# Footer row count at which the size-routed exact-percentile queries
+# (event_value_percentiles, equi_depth_bins) leave the holistic
+# ``F.percentile`` plan for ``exact_percentiles_distributed``: above every
+# bench scale factor, so bench numbers stay comparable; both branches
+# return bit-identical rows.
+PCT_DIST_MIN_ROWS = 500_000
+
+
 def exact_percentiles_distributed(
     df: DataFrame,
     value_col: str,

@@ -8,13 +8,15 @@ The reference's catalog maintenance is SQLite upserts + per-scene existence prob
 - skip-if-exists idempotence (`scene_copy.py:408-422`),
 - delete-then-insert child refresh (`scene_scanner.py:513-524`).
 
-Spark-first restatement: ALL of these are joins + a partitioned-parquet (or
-Delta, when available) rewrite.  The N-per-row probe loop becomes ONE
-full-outer join between catalog and listing — at 100 TB that is the
-difference between N API calls and one shuffle.  Delta Lake's MERGE INTO is
-the production sink; this module implements engine-level merge semantics on
-plain DataFrames so it runs in this environment and the write layer can bind
-to Delta/Iceberg later.
+Spark-first restatement: ALL of these are joins + a versioned-parquet
+rewrite.  The N-per-row probe loop becomes ONE full-outer join between
+catalog and listing — at 100 TB that is the difference between N API calls
+and one shuffle.  The persistent tables (``merge_upsert_parquet``,
+``purge_rows``, and the streaming CDC state in ``streaming/cdc.py``) share
+one commit, ``_commit_version``: immutable ``_v`` directories behind an
+fsync'd, atomically replaced ``_CURRENT`` pointer.  On an object store
+without atomic rename, that one function is what binds to a table-format
+commit (Delta/Iceberg ``MERGE INTO``) or a conditional PUT.
 """
 
 from __future__ import annotations
@@ -27,75 +29,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-try:  # optional Delta Lake backend — present on a production cluster
-    # image, absent in this container (pip is out of scope here); the
-    # versioned-parquet engine below is the behavior-identical fallback.
-    # The 1:1 API mapping is documented in NOTES_round6_session.md.
-    from delta.tables import DeltaTable  # type: ignore
-
-    _HAS_DELTA = True
-except Exception:  # pragma: no cover - container has no delta-spark
-    DeltaTable = None
-    _HAS_DELTA = False
-
-
-# Session confs that change QUERY SEMANTICS (not tuning): the Delta<3.1
-# autoMerge fallback runs its MERGE in a child session, which starts from
-# cluster defaults — every conf here is copied from the caller's session so
-# the fallback resolves casts/identifiers/timestamps under the same rules.
-_SEMANTIC_SESSION_CONFS = (
-    "spark.sql.session.timeZone",
-    "spark.sql.ansi.enabled",
-    "spark.sql.caseSensitive",
-    "spark.sql.storeAssignmentPolicy",
-    "spark.sql.legacy.timeParserPolicy",
-    "spark.sql.datetime.java8API.enabled",
-    "spark.sql.parquet.datetimeRebaseModeInRead",
-    "spark.sql.parquet.datetimeRebaseModeInWrite",
-    "spark.sql.parquet.int96RebaseModeInRead",
-    "spark.sql.parquet.int96RebaseModeInWrite",
-)
-
-
-def _child_session_with_semantics(spark):
-    """A child session (isolated SQLConf, shared SparkContext) whose
-    semantics-affecting runtime confs mirror the caller's.  newSession()
-    starts from cluster defaults, not the caller's runtime confs — without
-    the copy, a Delta<3.1 fallback MERGE would silently resolve casts,
-    identifiers, and timestamps under different ANSI/case-sensitivity/
-    timezone rules than the caller's session (ADVICE r8; previously only
-    timeZone was copied)."""
-    child = spark.newSession()
-    for key in _SEMANTIC_SESSION_CONFS:
-        try:
-            val = spark.conf.get(key, None)
-        except Exception:  # unknown key on this Spark build
-            val = None
-        if val is not None:
-            child.conf.set(key, val)
-    return child
-
-
-def _is_delta_table(path: str) -> bool:
-    """True when delta-spark is importable AND ``path`` is a real Delta
-    table (has a ``_delta_log``).  Routing key for the merge/read surface:
-    existing versioned-parquet tables keep using the engine's own commit
-    protocol even when the library is present, so enabling Delta never
-    reinterprets a table in place."""
-    return _HAS_DELTA and os.path.isdir(os.path.join(path, "_delta_log"))
-
-
 def _guard_delta_layout(path: str, op: str) -> None:
-    """Refuse destructive versioned-parquet maintenance on a directory
-    that carries a ``_delta_log`` when delta-spark is NOT importable:
-    without the library the routing predicate is false, and the pointer-
-    file sweep would rmtree the Delta log — silent table destruction
-    (review catch r7).  With the library present the caller routes to the
-    native Delta path instead."""
-    if not _HAS_DELTA and os.path.isdir(os.path.join(path, "_delta_log")):
+    """Refuse to treat a directory that carries a ``_delta_log`` as a
+    versioned-parquet table: a read would return the Delta part files
+    (including removed ones) as live rows, and a commit's GC sweep would
+    rmtree the Delta log — silent table destruction."""
+    if os.path.isdir(os.path.join(path, "_delta_log")):
         raise ValueError(
-            f"{op}: {path} is a Delta table but delta-spark is not "
-            "importable — refusing destructive maintenance on its layout"
+            f"{op}: {path} holds a _delta_log (a Delta table) — refusing "
+            "to read or rewrite it as a versioned-parquet table"
         )
 
 
@@ -201,7 +143,8 @@ def table_versions(path: str) -> list[str]:
 
 
 def read_parquet_table(spark, path: str, version: str | None = None) -> DataFrame:
-    """Read a table written by ``merge_upsert_parquet``.
+    """Read a table written by ``_commit_version`` (``merge_upsert_parquet``,
+    ``purge_rows``, or the streaming CDC state of ``streaming/cdc.py``).
 
     Default: resolve the ``_CURRENT`` pointer to the live version (plain
     parquet fallback for never-merged directories).  Time travel: pass an
@@ -217,17 +160,10 @@ def read_parquet_table(spark, path: str, version: str | None = None) -> DataFram
     a reader cannot hold versions alive — same contract as Delta's vacuum
     horizon.
 
-    Delta routing: when delta-spark is importable and ``path`` is a real
-    Delta table, reads go through the delta source (``versionAsOf`` for
-    time travel, with Delta's integer version ids) — same call surface,
-    Delta's own log provides the snapshot isolation the pointer file
-    provides here.
+    A directory holding a ``_delta_log`` is refused, not read as parquet
+    (``_guard_delta_layout``).
     """
-    if _is_delta_table(path):
-        reader = spark.read.format("delta")
-        if version is not None:
-            reader = reader.option("versionAsOf", int(version))
-        return reader.load(path)
+    _guard_delta_layout(path, "read_parquet_table")
     if version is not None:
         avail = table_versions(path)
         if version not in avail:
@@ -242,6 +178,79 @@ def read_parquet_table(spark, path: str, version: str | None = None) -> DataFram
     return spark.read.parquet(os.path.join(path, v))
 
 
+def _commit_version(path: str, frame: DataFrame, keep: int) -> None:
+    """Publish ``frame`` as the table's next version — the one commit
+    behind every persistent table in the engine.  Layout::
+
+        <path>/_CURRENT        pointer file, contains e.g. "_v00000002"
+        <path>/_v00000001      previous version (kept for rollback)
+        <path>/_v00000002      live version
+
+    No step ever mutates data a reader can be holding:
+
+    1. sweep orphans a crashed attempt left (``_staging-<next>``, an
+       unreferenced ``_v<next>``; next = live + 1), then materialize
+       ``frame`` into ``<path>/_staging-<next>`` (never
+       ``mode("overwrite")`` on the path being read — Spark plans lazily
+       and would truncate its own input mid-job);
+    2. ``os.rename`` staging → ``<path>/_v<next>`` (same-directory rename;
+       the new version is still unreferenced, so a crash here leaves the
+       live pointer — and therefore the table — untouched);
+    3. write the new version name to a temp file, fsync, and
+       ``os.replace`` it onto ``_CURRENT`` — the single atomic commit
+       point on POSIX/HDFS.  Readers resolve the pointer and see the old
+       version or the new one, never a torn mix and never a missing table;
+    4. garbage-collect down to the newest ``keep`` versions.  With
+       ``keep >= 2`` the previously live version always survives (the
+       rollback target: repoint ``_CURRENT`` by hand), and the root files
+       of a never-versioned directory count as the first commit's previous
+       version, removed only once a versioned predecessor exists.
+       ``keep == 1`` removes every older version and any root files too.
+       ``_LEASE`` and a streaming query's ``_checkpoint`` are never removed.
+
+    A crash at ANY step leaves the table readable and the commit
+    retryable.  The caller serializes writers (the lease, or the streaming
+    query that owns the state).
+
+    Object-store caveat: ``os.replace`` is atomic on POSIX filesystems and
+    HDFS but S3-class stores have no atomic rename — there, bind step 3 to
+    a table-format commit (Delta/Iceberg ``MERGE INTO``) or a
+    conditional-PUT of the pointer object; steps 1-2 stay identical.
+    """
+    cur = _table_current_version(path)
+    n = int(cur.lstrip("_v")) if cur else 0
+    new_v = f"_v{n + 1:08d}"
+    staging = os.path.join(path, f"_staging-{new_v}")
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(os.path.join(path, new_v), ignore_errors=True)
+
+    frame.write.mode("overwrite").parquet(staging)
+    os.rename(staging, os.path.join(path, new_v))
+
+    tmp = os.path.join(path, "._CURRENT.tmp")
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(new_v)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, os.path.join(path, "_CURRENT"))
+
+    protected = {"_CURRENT", "_LEASE", "_checkpoint", new_v}
+    if keep > 1:
+        protected.update(table_versions(path)[-keep:])
+        if cur:
+            protected.add(cur)
+    for entry in os.listdir(path):
+        if entry in protected:
+            continue
+        if keep > 1 and cur is None and not entry.startswith(("_v", "_staging-")):
+            continue  # root files: the previous version of a first commit
+        full = os.path.join(path, entry)
+        if os.path.isdir(full):
+            shutil.rmtree(full, ignore_errors=True)
+        else:
+            os.remove(full)
+
+
 def merge_upsert_parquet(
     spark,
     path: str,
@@ -251,42 +260,16 @@ def merge_upsert_parquet(
     lease_ttl_s: float = 3600.0,
     keep_versions: int = 2,
 ) -> DataFrame:
-    """Persistent MERGE into a parquet table via versioned directories and
-    an atomic pointer-file commit.  Returns the re-read merged table.
+    """Persistent MERGE into a parquet table: ``merge_upsert`` of the live
+    version and ``source``, published by ``_commit_version`` (versioned
+    directories + atomic pointer-file commit; see there for the layout and
+    the crash guarantees).  Returns the re-read merged table.
 
     The write path is the part `merge_upsert` alone leaves open
-    (`scene_registry.py:224-239` commits in SQLite).  Layout after the
-    first merge::
-
-        <path>/_CURRENT        pointer file, contains e.g. "_v00000002"
-        <path>/_v00000001      previous version (kept for rollback)
-        <path>/_v00000002      live version
-
-    Commit protocol — no step ever mutates data a reader can be holding:
-
-    1. materialize the merged result into ``<path>/_staging-<next>``
-       (never ``mode("overwrite")`` on the path being read — Spark plans
-       lazily and would truncate its own input mid-job);
-    2. ``os.rename`` staging → ``<path>/_v<next>`` (same-directory rename;
-       the new version is still unreferenced, so a crash here leaves the
-       live pointer — and therefore the table — untouched);
-    3. write the new version name to a temp file, fsync, and
-       ``os.replace`` it onto ``_CURRENT`` — the single atomic commit
-       point on POSIX/HDFS.  Readers resolve the pointer and see the old
-       version or the new one, never a torn mix and never a missing table;
-    4. garbage-collect versions older than the PREVIOUS one — the previous
-       version survives until the next successful merge, so there is
-       always a rollback target (repoint ``_CURRENT`` by hand).
-
-    Orphans from a crashed run (staging dirs, an unreferenced ``_v<next>``)
-    are swept at the start of the next merge; the merge is therefore
-    idempotently retryable after a crash at ANY step.
-
-    Object-store caveat: ``os.replace`` is atomic on POSIX filesystems and
-    HDFS but S3-class stores have no atomic rename — there, bind step 3 to
-    a table-format commit (Delta/Iceberg ``MERGE INTO``) or a
-    conditional-PUT of the pointer object; steps 1-2 and the merge compute
-    stay identical.
+    (`scene_registry.py:224-239` commits in SQLite).  Orphans from a
+    crashed run (staging dirs, an unreferenced ``_v<next>``) are swept by
+    the next merge, so the merge is idempotently retryable after a crash
+    at ANY step.
 
     Concurrent writers: a single-writer LEASE (``<path>/_LEASE``,
     ``O_EXCL``-claimed, TTL ``lease_ttl_s``) arbitrates — a second merge
@@ -308,117 +291,15 @@ def merge_upsert_parquet(
     version directory is self-describing parquet, so old versions keep
     their old schema and time travel reads it unchanged.
 
-    Delta routing: when delta-spark is importable and ``path`` is already
-    a Delta table, the merge executes as a native ``MERGE INTO``
-    (``whenMatchedUpdate(All)`` + ``whenNotMatchedInsertAll``) — Delta's
-    optimistic concurrency replaces the writer lease, its log retention
-    replaces ``keep_versions``, and the return value is the same re-read
-    merged table.  A plain/versioned-parquet path NEVER auto-converts;
-    create the Delta table explicitly first (one-time migration step in
-    NOTES_round6_session.md).
+    A directory holding a ``_delta_log`` is refused before anything is
+    written (``_guard_delta_layout``).
     """
-    if _is_delta_table(path):
-        tgt = DeltaTable.forPath(spark, path)
-        # Plain equality, NOT null-safe <=>: the versioned-parquet
-        # fallback joins on the keys with full_outer semantics where
-        # NULL never matches NULL — a NULL-key source row INSERTS there,
-        # so it must insert here too or the two backends diverge on the
-        # same call (review catch r7).
-        cond = " AND ".join(f"t.`{k}` = u.`{k}`" for k in keys)
-        cols = update_cols or [c for c in source.columns if c not in keys]
-        target_cols = set(read_parquet_table(spark, path).columns)
-        # Mirror merge_upsert's NULL-preserving update exactly: a NULL in
-        # the source keeps the target value (coalesce), columns new to the
-        # target take the source value outright.  The `set` expressions
-        # are unbound Column refs, so one dict serves both sessions below.
-        update_set = {
-            c: (
-                F.coalesce(F.col(f"u.`{c}`"), F.col(f"t.`{c}`"))
-                if c in target_cols
-                else F.col(f"u.`{c}`")
-            )
-            for c in cols
-        }
-
-        def _build_merge(tbl, src):
-            return (
-                tbl.alias("t")
-                .merge(src.alias("u"), cond)
-                .whenMatchedUpdate(set=update_set)
-                .whenNotMatchedInsertAll()
-            )
-
-        m = _build_merge(tgt, source)
-        # Schema evolution parity with the fallback (which appends
-        # source-only columns automatically): Delta >= 3.1 exposes it on
-        # the merge builder; older releases need the session-conf flag.
-        # Scope that flag to a CHILD session (isolated SQLConf, shared
-        # SparkContext) instead of toggling the caller's — a concurrent
-        # Delta operation on the shared session would otherwise silently
-        # execute with autoMerge enabled, and a concurrent restore could
-        # clobber the flag (ADVICE r7; same pattern as purge_rows'
-        # retention-check override).  The source DataFrame crosses
-        # sessions via a global temp view (session-scoped views don't).
-        if hasattr(m, "withSchemaEvolution"):
-            m.withSchemaEvolution().execute()
-        else:  # pragma: no cover - only reachable on Delta < 3.1 images
-            child = _child_session_with_semantics(spark)
-            child.conf.set(
-                "spark.databricks.delta.schema.autoMerge.enabled", "true"
-            )
-            gview = f"wdp_merge_src_{os.getpid()}_{id(source):x}"
-            source.createOrReplaceGlobalTempView(gview)
-            try:
-                _build_merge(
-                    DeltaTable.forPath(child, path),
-                    child.table(f"global_temp.{gview}"),
-                ).execute()
-            finally:
-                spark.catalog.dropGlobalTempView(gview)
-        return read_parquet_table(spark, path)
+    _guard_delta_layout(path, "merge_upsert_parquet")
     lease = _acquire_lease(path, ttl_s=lease_ttl_s)
     try:
         target = read_parquet_table(spark, path)
         merged = merge_upsert(target, source, keys, update_cols)
-
-        cur = _table_current_version(path)
-        n = int(cur.lstrip("_v")) if cur else 0
-        new_v = f"_v{n + 1:08d}"
-        staging = os.path.join(path, f"_staging-{new_v}")
-        # sweep orphans a crashed previous attempt may have left behind
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(os.path.join(path, new_v), ignore_errors=True)
-
-        merged.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(path, new_v))
-
-        tmp = os.path.join(path, "._CURRENT.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(new_v)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(path, "_CURRENT"))
-
-        # GC: keep the newest `keep_versions` directories (min 2: live +
-        # rollback target).  Legacy root files (from the pre-versioned
-        # layout) are the "previous version" of the first merge — they are
-        # removed only once a versioned predecessor exists.
-        horizon = max(2, int(keep_versions))
-        keep = {"_CURRENT", "_LEASE", new_v}
-        keep.update(table_versions(path)[-horizon:])
-        if cur:
-            keep.add(cur)
-        for entry in os.listdir(path):
-            if entry in keep:
-                continue
-            full = os.path.join(path, entry)
-            if entry.startswith("_v") or entry.startswith("_staging-"):
-                shutil.rmtree(full, ignore_errors=True)
-            elif cur is not None:
-                if os.path.isdir(full):
-                    shutil.rmtree(full, ignore_errors=True)
-                else:
-                    os.remove(full)
+        _commit_version(path, merged, max(2, int(keep_versions)))
         return read_parquet_table(spark, path)
     finally:
         _release_lease(lease)
@@ -435,70 +316,22 @@ def purge_rows(
     (on ``keys``) from the merged table AND from its whole version
     history.  Compliance is the one case where time travel must lose data:
     a GC that keeps rollback versions would keep the purged rows readable,
-    so after the new version commits, ALL older versions are removed —
-    this purge is deliberately not rollback-able (the Delta
-    DELETE-then-VACUUM(0) story as one atomic-feeling step).
+    so the commit keeps ONE version — every older version and legacy root
+    file goes — and this purge is deliberately not rollback-able (the
+    Delta DELETE-then-VACUUM(0) story as one atomic-feeling step).
 
-    Same lease + staging + pointer-swap protocol as ``merge_upsert_parquet``
-    (crash at any step leaves the table readable; retry completes), with
-    the delete expressed as a broadcast-friendly left_anti join.  Returns
-    the re-read table.
-
-    Delta routing (review catch r7 — the pointer-file surgery below would
-    rmtree ``_delta_log`` on a Delta table): on a real Delta table the
-    delete runs as a native ``MERGE … WHEN MATCHED DELETE``, then the
-    history purge is Delta's own ``VACUUM(0)`` — executed on a CHILD
-    session so the retention-check override never leaks into shared conf
-    (the kcore_contract scoping pattern).
+    Same lease and ``_commit_version`` as ``merge_upsert_parquet`` (crash
+    at any step leaves the table readable; retry completes), with the
+    delete expressed as a broadcast-friendly left_anti join.  Returns the
+    re-read table.  A directory holding a ``_delta_log`` is refused before
+    anything is written (``_guard_delta_layout``).
     """
     _guard_delta_layout(path, "purge_rows")
-    if _is_delta_table(path):
-        tgt = DeltaTable.forPath(spark, path)
-        cond = " AND ".join(f"t.`{k}` = u.`{k}`" for k in keys)
-        tgt.alias("t").merge(
-            key_rows.select(*keys).distinct().alias("u"), cond
-        ).whenMatchedDelete().execute()
-        # history purge: vacuum(0) needs the retention check off; scope
-        # it to a child session so concurrent work is unaffected
-        child = spark.newSession()
-        child.conf.set(
-            "spark.databricks.delta.retentionDurationCheck.enabled", "false"
-        )
-        DeltaTable.forPath(child, path).vacuum(0)
-        return read_parquet_table(spark, path)
     lease = _acquire_lease(path, ttl_s=lease_ttl_s)
     try:
         target = read_parquet_table(spark, path)
         kept = target.join(key_rows.select(*keys).distinct(), keys, "left_anti")
-
-        cur = _table_current_version(path)
-        n = int(cur.lstrip("_v")) if cur else 0
-        new_v = f"_v{n + 1:08d}"
-        staging = os.path.join(path, f"_staging-{new_v}")
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(os.path.join(path, new_v), ignore_errors=True)
-
-        kept.write.mode("overwrite").parquet(staging)
-        os.rename(staging, os.path.join(path, new_v))
-
-        tmp = os.path.join(path, "._CURRENT.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(new_v)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, os.path.join(path, "_CURRENT"))
-
-        # history purge: the point of the operation — nothing readable may
-        # retain the deleted rows, so every older version and legacy root
-        # file goes, not just the beyond-horizon ones
-        for entry in os.listdir(path):
-            if entry in {"_CURRENT", "_LEASE", new_v}:
-                continue
-            full = os.path.join(path, entry)
-            if os.path.isdir(full):
-                shutil.rmtree(full, ignore_errors=True)
-            else:
-                os.remove(full)
+        _commit_version(path, kept, keep=1)
         return read_parquet_table(spark, path)
     finally:
         _release_lease(lease)
@@ -515,19 +348,12 @@ def vacuum_table(path: str, keep_last: int = 1) -> list[str]:
     vacuuming concurrently with a merge would race its GC sweep — and also
     sweeps crashed-run ``_staging-*`` orphans.  Readers stay lock-free but
     lose time-travel targets below the horizon, exactly like Delta: vacuum
-    is the explicit trade of rollback depth for storage.
+    is the explicit trade of rollback depth for storage.  A directory
+    holding a ``_delta_log`` is refused (``_guard_delta_layout``).
     """
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the live version)")
     _guard_delta_layout(path, "vacuum_table")
-    if _is_delta_table(path):
-        # version-COUNT trimming has no Delta analog (Delta vacuums by
-        # retention TIME) and the _v*/_CURRENT sweep below would destroy
-        # a Delta layout — refuse loudly (review catch r7)
-        raise ValueError(
-            "vacuum_table manages versioned-parquet history; for a Delta "
-            "table use DeltaTable.vacuum(retention_hours)"
-        )
     lease = _acquire_lease(path)
     try:
         versions = table_versions(path)

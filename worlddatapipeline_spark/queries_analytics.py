@@ -3578,7 +3578,7 @@ def q_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-reducer holistic aggregate class in the registry.  A
     deterministic size router (parquet-footer row count, no job; same
     pattern as ``fuzzy_record_linkage``) keeps this reference plan below
-    ``SPARK_GRAFT_PCT_DIST_MIN`` rows (default 500k — covers the bench
+    ``aggregates.PCT_DIST_MIN_ROWS`` rows (500k — covers the bench
     SFs) and above it derives the SAME boundaries via
     ``exact_percentiles_distributed`` (distributed counts +
     range-partitioned parallel cumsum + rank lookup).  Boundaries are
@@ -3587,10 +3587,9 @@ def q_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's own interpolation expression anyway (pinned by
     ``test_equi_depth_bins_router_branches_identical``).  Measured
     sf1.0: boundary aggregate 5.47 s → 2.77 s."""
-    import os  # noqa: PLC0415
-
     from pyspark.sql.functions import broadcast  # noqa: PLC0415
 
+    from .operators import aggregates as agg_ops  # noqa: PLC0415
     from .session import parquet_num_rows  # noqa: PLC0415
 
     (orders,) = _t(spark, sf_dir, "orders")
@@ -3600,15 +3599,11 @@ def q_equi_depth_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents")
     )
     qs = [i / 8.0 for i in range(1, 8)]
-    if parquet_num_rows(sf_dir, "orders") < int(
-        os.environ.get("SPARK_GRAFT_PCT_DIST_MIN", "500000")
-    ):
+    if parquet_num_rows(sf_dir, "orders") < agg_ops.PCT_DIST_MIN_ROWS:
         bounds = cents.agg(
             F.percentile("cents", F.array(*[F.lit(q) for q in qs])).alias("bs")
         )
     else:
-        from .operators import aggregates as agg_ops  # noqa: PLC0415
-
         bounds = (
             agg_ops.exact_percentiles_distributed(cents, "cents", qs)
             .agg(

@@ -710,6 +710,11 @@ FROM pairs CROSS JOIN pop p
 # Blocked fuzzy record linkage
 # ---------------------------------------------------------------------------
 
+# Roster size (parquet footer rows) above which fuzzy_record_linkage runs
+# the FastSS plan instead of the block join; see its docstring.
+FUZZY_FASTSS_MIN_ROWS = 200_000
+
+
 def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Record linkage with blocking + edit distance, self-contained with
     a checkable ground truth: a deterministic one-character deletion
@@ -747,7 +752,7 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
       bench scales; its win starts at the ~sf2 crossover.
 
     The router picks the block join while the roster count is at or
-    under ``SPARK_GRAFT_FUZZY_FASTSS_MIN`` (default 200 000 — just
+    under ``FUZZY_FASTSS_MIN_ROWS`` (200 000 — just
     above the measured sf1.0 roster, below the extrapolated ~sf2
     crossover where the n²/10⁴ term overtakes FastSS's fixed stages)
     and the FastSS form above it, so a 100× corpus runs the linear
@@ -755,8 +760,6 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the parquet footer on the driver (the statistic Spark's own
     planner uses) — no job, no data pass; a count() action here cost
     0.35 s, more than the whole routed query."""
-    import os  # noqa: PLC0415
-
     (customer,) = _t(spark, sf_dir, "customer")
     clean = customer.select(
         F.col("c_custkey").alias("key"), F.col("c_name").alias("name")
@@ -772,9 +775,7 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .session import parquet_num_rows  # noqa: PLC0415
 
     n_roster = parquet_num_rows(sf_dir, "customer")
-    if n_roster <= int(
-        os.environ.get("SPARK_GRAFT_FUZZY_FASTSS_MIN", "200000")
-    ):
+    if n_roster <= FUZZY_FASTSS_MIN_ROWS:
         # Reference block-join plan: fastest while n²/10⁴ lev pairs cost
         # less than FastSS's fixed stages (measured: wins at sf0.1 AND
         # sf1.0; see docstring table).

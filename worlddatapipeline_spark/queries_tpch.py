@@ -580,7 +580,7 @@ def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     grows without bound at 100 TB.  A deterministic size router (same
     pattern as ``fuzzy_record_linkage``; the row count comes from the
     parquet FOOTER, no job) keeps the reference plan below
-    ``SPARK_GRAFT_PCT_DIST_MIN`` rows (default 500k — covers the driver's
+    ``aggregates.PCT_DIST_MIN_ROWS`` rows (500k — covers the
     bench SFs, so bench numbers stay comparable) and above it switches to
     ``exact_percentiles_distributed`` — distributed (type, value) counts,
     range-partitioned parallel cumsum, rank lookup with Spark's own
@@ -589,14 +589,10 @@ def q_event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     empirical 60/60 formula pin in the operator); measured sf1.0:
     3.28 s → 2.96 s, and the single-reducer eval is gone from the plan.
     """
-    import os  # noqa: PLC0415
-
     from .session import parquet_num_rows  # noqa: PLC0415
 
     (events,) = _t(spark, sf_dir, "events")
-    if parquet_num_rows(sf_dir, "events") < int(
-        os.environ.get("SPARK_GRAFT_PCT_DIST_MIN", "500000")
-    ):
+    if parquet_num_rows(sf_dir, "events") < agg_ops.PCT_DIST_MIN_ROWS:
         return (
             events.groupBy("event_type")
             .agg(

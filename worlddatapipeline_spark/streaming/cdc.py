@@ -34,6 +34,13 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..operators.reconcile import (
+    _commit_version,
+    _guard_delta_layout,
+    _table_current_version,
+    read_parquet_table,
+)
+
 
 def cdc_state_merge(
     state: DataFrame,
@@ -95,10 +102,9 @@ def cdc_stream_into_dir(
 
     foreachBatch(state_vN ∪ batch → state_vN+1) with the monoid merge, so
     replays/out-of-order batches converge; each version is written whole
-    (tiny at test scale; at 100 TB this binds to the persistent MERGE's
-    versioned-dir + pointer commit, or Delta `MERGE INTO`, instead of a
-    full rewrite).  Returns the StreamingQuery; the caller awaits it and
-    reads ``current_state(spark, state_dir)``.
+    (tiny at test scale; at 100 TB the full rewrite would give way to a
+    table-format ``MERGE INTO``).  Returns the StreamingQuery; the caller
+    awaits it and reads ``current_state(spark, state_dir)``.
 
     RESUME-SAFE: the seed snapshot is only written on first use of
     ``state_dir``.  The streaming checkpoint records which source files
@@ -108,16 +114,18 @@ def cdc_stream_into_dir(
     skips the already-consumed files.  To start over, use a fresh
     ``state_dir`` (which holds the checkpoint too).
 
-    Commit protocol mirrors the persistent MERGE: version directory first,
-    then an fsync'd pointer tmp + atomic rename; versions older than the
-    previous are GC'd so a long-running stream holds at most two state
-    copies, and a crash between write and pointer-swap leaves the prior
-    version live.
+    The seed and every micro-batch are published by the persistent MERGE's
+    own commit, ``reconcile._commit_version``: ``_v`` directory first, then
+    the fsync'd ``_CURRENT`` pointer swap; GC keeps live + previous, so a
+    long-running stream holds at most two state copies, and a crash between
+    write and pointer swap leaves the prior version live.  Batches take no
+    lease: the streaming query that owns ``<state_dir>/_checkpoint`` is the
+    single writer.
     """
     spark = snapshot.sparkSession
+    _guard_delta_layout(state_dir, "cdc_stream_into_dir")
     os.makedirs(state_dir, exist_ok=True)
-    pointer = os.path.join(state_dir, "_CURRENT")
-    if not os.path.isfile(pointer):
+    if _table_current_version(state_dir) is None:
         seed = snapshot.withColumn(op_col, F.lit(upsert_ops[0]))
         for c in seq_cols:
             if c not in seed.columns:
@@ -127,24 +135,14 @@ def cdc_stream_into_dir(
             seed = seed.withColumn(
                 c, F.col(c).cast(changes_stream.schema[c].dataType)
             )
-        seed.write.mode("overwrite").parquet(os.path.join(state_dir, "v0"))
-        _commit_pointer(state_dir, "v0")
+        _commit_version(state_dir, seed, keep=2)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        cur = _read_current(spark, state_dir)
         merged = cdc_state_merge(
-            cur, batch_df, key_cols, seq_cols, op_col, upsert_ops, delete_op
+            read_parquet_table(spark, state_dir), batch_df, key_cols, seq_cols,
+            op_col, upsert_ops, delete_op,
         )
-        version = f"v{batch_id + 1}_{os.getpid()}"
-        merged.write.mode("overwrite").parquet(os.path.join(state_dir, version))
-        prev = _commit_pointer(state_dir, version)
-        # GC: keep live + previous; drop anything older (bounded disk)
-        import shutil
-
-        keep = {version, prev, "_checkpoint"}
-        for d in os.listdir(state_dir):
-            if d.startswith("v") and d not in keep:
-                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
+        _commit_version(state_dir, merged, keep=2)
 
     return (
         changes_stream.writeStream.foreachBatch(_apply)
@@ -154,29 +152,6 @@ def cdc_stream_into_dir(
     )
 
 
-def _commit_pointer(state_dir: str, version: str) -> str | None:
-    """fsync'd tmp + atomic rename of the ``_CURRENT`` pointer; returns the
-    previously live version (None on first commit)."""
-    pointer = os.path.join(state_dir, "_CURRENT")
-    prev = None
-    if os.path.isfile(pointer):
-        with open(pointer, encoding="utf-8") as fh:
-            prev = fh.read().strip()
-    tmp = pointer + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(version)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, pointer)
-    return prev
-
-
-def _read_current(spark, state_dir: str) -> DataFrame:
-    with open(os.path.join(state_dir, "_CURRENT"), encoding="utf-8") as fh:
-        version = fh.read().strip()
-    return spark.read.parquet(os.path.join(state_dir, version))
-
-
 def current_state(spark, state_dir: str) -> DataFrame:
     """Read back the latest committed state version."""
-    return _read_current(spark, state_dir)
+    return read_parquet_table(spark, state_dir)
