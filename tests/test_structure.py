@@ -31,3 +31,34 @@ def test_only_reconcile_makes_commits_durable():
                     if a.name in DURABILITY_CALLS
                 ]
     assert not offenders, offenders
+
+
+def _reads_parquet(call: ast.Call) -> bool:
+    """``<x>.read...parquet(...)`` or ``<x>.readStream...parquet(...)``."""
+    if not (isinstance(call.func, ast.Attribute) and call.func.attr == "parquet"):
+        return False
+    node = call.func.value
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute) and node.attr in ("read", "readStream"):
+            return True
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return False
+
+
+def test_only_session_reads_input_tables():
+    """Input tables are opened through ``session.py`` (``load_tables``,
+    ``streaming_events``), which supplies the footer schema: no other module
+    passes ``sf_dir`` to a ``.read``/``.readStream`` parquet call."""
+    offenders = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Call) and _reads_parquet(node) and any(
+                isinstance(n, ast.Name) and n.id == "sf_dir"
+                for arg in [*node.args, *(k.value for k in node.keywords)]
+                for n in ast.walk(arg)
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, offenders

@@ -816,7 +816,9 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     # Blocked-pair COUNT and roster size from ONE per-block tally (exact,
     # no pair fan-out): n_candidates = Σ_blk |clean_blk|·|dirty_blk| and
-    # n_rec = Σ_blk |clean_blk| — a single union-tag shuffle.
+    # n_rec = Σ_blk |clean_blk| — a single union-tag shuffle.  The NULL
+    # block (NULL name or key) joins nothing in the block join, so it adds
+    # to n_rec only.
     tallies = (
         clean.select(
             F.expr("right(name, 4)").alias("blk"), F.lit(1).alias("is_clean")
@@ -834,7 +836,12 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.coalesce(
-                F.sum(F.col("n_clean") * F.col("n_dirty")),
+                F.sum(
+                    F.when(
+                        F.col("blk").isNotNull(),
+                        F.col("n_clean") * F.col("n_dirty"),
+                    )
+                ),
                 F.lit(0).cast("long"),
             ).alias("n_candidates"),
             F.coalesce(F.sum("n_clean"), F.lit(0).cast("long")).alias(
@@ -863,8 +870,12 @@ def q_fuzzy_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dkey", F.explode(F.expr(_variants.format(c="dname"))).alias("v")
     )
     cand = cvar.join(dvar, "v").select("key", "dkey").distinct()
+    # null-safe: a NULL-key clean record pairs in the block join too
     matched = (
-        cand.join(clean, "key")
+        cand.join(
+            clean.withColumnRenamed("key", "ck"),
+            F.col("key").eqNullSafe(F.col("ck")),
+        )
         .join(dirty.withColumnRenamed("dkey", "dk2"), F.col("dkey") == F.col("dk2"))
         .filter(
             (F.expr("right(name, 4)") == F.expr("right(dname, 4)"))

@@ -122,7 +122,9 @@ def streaming_events(spark: SparkSession, sf_dir: str):
     from pyspark.sql import functions as F  # noqa: PLC0415
     from pyspark.sql.types import LongType, TimestampNTZType  # noqa: PLC0415
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = _footer_schema(spark, sf_dir, "events")
+    if raw_schema is None:
+        raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -137,24 +139,136 @@ def streaming_events(spark: SparkSession, sf_dir: str):
     return stream
 
 
+def _footer_files(sf_dir: str, name: str) -> list[str]:
+    """The parquet file(s) of one input table, in path order: the single
+    ``<name>.parquet`` file (the driver's testdata layout), or the part
+    files of a Spark-written ``<name>.parquet/`` directory, skipping the
+    ``_``/``.`` entries Spark itself skips."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    ]
+
+
 def parquet_num_rows(sf_dir: str, name: str) -> int:
     """Exact row count of one input table from the parquet FOOTER — the
     same statistic Spark's own scan planning reads — without scheduling
     a job.  Used by size-routed plan choices (e.g. the
     ``fuzzy_record_linkage`` hybrid), where a full count action would
-    cost more than the routing decision saves.  Handles both a single
-    ``<name>.parquet`` file (the driver's testdata layout) and a
-    Spark-written directory of part files."""
+    cost more than the routing decision saves."""
     import pyarrow.parquet as pq  # noqa: PLC0415
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in sorted(os.listdir(path))
-            if f.endswith(".parquet")
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _footer_files(sf_dir, name))
+
+
+# Confs Spark's parquet schema inference reads, at their defaults: the
+# footer schema below reproduces that inference only under these values.
+_INFERENCE_CONFS = {
+    "spark.sql.parquet.binaryAsString": "false",
+    "spark.sql.parquet.int96AsTimestamp": "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+    "spark.sql.parquet.mergeSchema": "false",
+}
+
+
+def _proven_arrow_type(t) -> bool:
+    """Arrow types whose Spark inference ``tests/test_session_schema.py``
+    proves equal to ``from_arrow_type``'s (timestamps only at the top
+    level, where :func:`_footer_schema` handles them)."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    if pa.types.is_list(t):
+        return _proven_arrow_type(t.value_type)
+    if pa.types.is_map(t):
+        return _proven_arrow_type(t.key_type) and _proven_arrow_type(t.item_type)
+    if pa.types.is_struct(t):
+        return all(_proven_arrow_type(f.type) for f in t)
+    return any(
+        is_(t)
+        for is_ in (
+            pa.types.is_boolean, pa.types.is_int8, pa.types.is_int16,
+            pa.types.is_int32, pa.types.is_int64, pa.types.is_float32,
+            pa.types.is_float64, pa.types.is_decimal128, pa.types.is_string,
+            pa.types.is_binary, pa.types.is_date32,
         )
-    return pq.ParquetFile(path).metadata.num_rows
+    )
+
+
+def _nullable(dt):
+    """``dt`` with every field, array element and map value nullable, as
+    Spark's file sources mark a data schema (``asNullable``)."""
+    from pyspark.sql.types import (  # noqa: PLC0415
+        ArrayType, MapType, StructField, StructType,
+    )
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _footer_schema(spark: SparkSession, sf_dir: str, name: str):
+    """The ``StructType`` ``spark.read.parquet`` infers for one input table,
+    built from its parquet footer without scheduling a job, or ``None``
+    when the footer path cannot promise that equality.
+
+    Spark's inference (``mergeSchema=false``) reads one footer, the first
+    data file in path order, so this reads that same footer.  The arrow
+    schema goes through ``from_arrow_type``, with three corrections pinned
+    by ``tests/test_session_schema.py``: a top-level nanosecond timestamp
+    is ``LongType`` (``nanosAsLong``, which callers pin) unless its
+    physical type is INT96, which Spark reads as ``TimestampType``; every
+    field is nullable, recursively.  ``None`` (use Spark's own inference)
+    for: a type outside :func:`_proven_arrow_type`, a nested timestamp, a
+    non-default inference conf, a directory with no part files, or a
+    Spark-written footer whose stored Spark schema disagrees with the
+    derived one (Spark's inference returns the stored schema)."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyspark.sql.pandas.types import from_arrow_type  # noqa: PLC0415
+    from pyspark.sql.types import (  # noqa: PLC0415
+        LongType, StructField, StructType, TimestampType,
+        _parse_datatype_json_string,
+    )
+
+    files = _footer_files(sf_dir, name)
+    if not files or any(
+        spark.conf.get(k, v).lower() != v for k, v in _INFERENCE_CONFS.items()
+    ):
+        return None
+    pf = pq.ParquetFile(files[0])
+    int96 = {
+        c.path
+        for c in map(pf.schema.column, range(len(pf.schema)))
+        if c.physical_type == "INT96"
+    }
+    fields = []
+    for f in pf.schema_arrow:
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            dt = TimestampType() if f.name in int96 else LongType()
+        elif pa.types.is_timestamp(f.type) or _proven_arrow_type(f.type):
+            dt = _nullable(from_arrow_type(f.type, prefer_timestamp_ntz=True))
+        else:
+            return None
+        fields.append(StructField(f.name, dt, True))
+    schema = StructType(fields)
+    stored = (pf.metadata.metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata"
+    )
+    if stored is not None and _nullable(
+        _parse_datatype_json_string(stored.decode())
+    ) != schema:
+        return None
+    return schema
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
@@ -163,6 +277,15 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
     Mirrors the reference's catalog-open step (`scene_registry.py:16-25` opens
     SQLite; here we attach parquet).  Column pruning + predicate pushdown then
     happen automatically at the parquet scan.
+
+    Each table is read with a supplied schema, built from its parquet footer
+    by :func:`_footer_schema` (one footer read, ~0.2 ms), so opening a table
+    schedules no Spark job; ``spark.read.parquet``'s own inference is a job
+    per table (~80 ms on 4 cores).  Where the footer schema cannot promise
+    to equal Spark's inference (an untested type, a non-default inference
+    conf) the table falls back to that inference.  The footer is read on
+    every call: there is no memo, so a rewritten input is never read with
+    a stale schema.
     """
     names = names or [
         "region",
@@ -198,7 +321,9 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
 
     out = {}
     for n in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet"))
+        schema = _footer_schema(spark, sf_dir, n)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(os.path.join(sf_dir, f"{n}.parquet"))
         for f in df.schema.fields:
             if isinstance(f.dataType, TimestampNTZType):
                 df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
